@@ -185,7 +185,10 @@ def main(argv=None) -> int:
     b.add_argument("--block-range", type=int, default=4096)
     b.add_argument("--chunk-blocks", type=int, default=16)
     b.add_argument("--splits", type=int, default=64)
-    b.add_argument("--groups", type=int, default=8)
+    b.add_argument("--groups", type=int, default=None,
+                   help="stage-1 checkpoint groups, the unit of --resume "
+                        "(default: one per 16 MiB of corpus, 1 to 8; on "
+                        "--resume, the count the checkpoints were written with)")
     b.add_argument("--resume", action="store_true")
     b.set_defaults(fn=cmd_build)
 

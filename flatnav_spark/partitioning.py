@@ -278,6 +278,10 @@ def sample_segment_key_boundaries(dir_paths, num_partitions: int,
     if not files:
         return None
     tabs = [pq.read_table(f, columns=[*keys, weight_col]) for f in files]
+    # checked before the concat: all-empty files give no chunks, and a
+    # chunked array without chunks has no type to infer
+    if sum(t.num_rows for t in tabs) < min_rows:
+        return None
     # concat by column (types match; field NULLABILITY may differ between
     # generations written by different code paths, which concat_tables
     # rejects)
@@ -286,9 +290,6 @@ def sample_segment_key_boundaries(dir_paths, num_partitions: int,
             [c for t in tabs for c in t.column(name).chunks])
         for name in [*keys, weight_col]
     })
-    n = tbl.num_rows
-    if n < min_rows:
-        return None
     order = pc.sort_indices(
         tbl, sort_keys=[(k, "ascending") for k in keys]).to_numpy()
     w = tbl.column(weight_col).to_numpy(zero_copy_only=False).astype(np.float64)

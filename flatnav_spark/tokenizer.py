@@ -216,7 +216,7 @@ def make_tfmap_udf(mode: str = "code"):
     arrays cuts the Arrow transfer ~3x (unique terms vs all tokens) and
     removes the downstream groupBy shuffle entirely — the per-doc count is
     the B2 ``add`` analog (Index.h:353-378) done inside the Arrow batch.
-    Counting goes through the distinct-raw fast path (tfmap_code)."""
+    Counting is ``_TFMAP_FNS[mode]`` (expand, then one Counter pass)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 

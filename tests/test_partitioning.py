@@ -4,6 +4,7 @@ trick rests on it), and repartition_dense_range must place each dense-key
 range alone in its own task — the layout repartitionByRange produces,
 without its sampling job."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from flatnav_spark.partitioning import (
@@ -150,3 +151,32 @@ def test_sampled_term_chunk_range_matches_repartition_by_range(spark, tmp_path):
     rows_a = sorted(map(tuple, idx_a.postings(spark).select(*cols).collect()))
     rows_b = sorted(map(tuple, idx_b.postings(spark).select(*cols).collect()))
     assert rows_a == rows_b
+
+
+
+@pytest.mark.parametrize("zero_chunk_reader", [False, True])
+def test_segment_key_sampler_empty_files_fall_back(tmp_path, monkeypatch,
+                                                   zero_chunk_reader):
+    """Part files with no rows (an index built from an empty corpus) give
+    no sample: the sampler returns None so optimize_index falls back to
+    repartitionByRange. An empty file may read back as a table with no
+    chunks at all, which pa.chunked_array cannot type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flatnav_spark.partitioning import sample_segment_key_boundaries
+
+    schema = pa.schema([("term", pa.string()), ("chunk_id", pa.int64()),
+                        ("payload_len", pa.int64())])
+    gens = []
+    for g in range(2):
+        d = tmp_path / f"gen{g}"
+        d.mkdir()
+        for i in range(2):
+            pq.write_table(schema.empty_table(), str(d / f"part-{i}.parquet"))
+        gens.append(str(d))
+    if zero_chunk_reader:
+        monkeypatch.setattr(
+            pq, "read_table",
+            lambda f, columns: pa.Table.from_batches([], schema).select(columns))
+    assert sample_segment_key_boundaries(gens, 4) is None

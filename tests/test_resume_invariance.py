@@ -16,7 +16,9 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from flatnav_spark.build import _marker_path, build_index
+from flatnav_spark.build import (_complete_groups, _marker_path,
+                                 _n_groups_for_bytes, _resume_n_groups,
+                                 build_index)
 from flatnav_spark.corpus import corpus_df, synth_queries
 from flatnav_spark.query import batch_query
 
@@ -95,25 +97,76 @@ def test_resume_refuses_config_mismatch(spark, tmp_path):
 
 
 def test_partitioning_invariance(spark, tmp_path):
-    """Same input, different shuffle-partition count and out_partitions ->
-    identical logical index content and identical query results."""
+    """Same input, different shuffle-partition count, out_partitions and
+    stage-1 group count -> identical logical index content and identical
+    query results. The in-memory corpus has no size estimate, so the
+    automatic group count (n_groups=None) falls back to 8."""
     corpus = corpus_df(spark, N_DOCS)
-    a_path, b_path = str(tmp_path / "a"), str(tmp_path / "b")
+    a_path = str(tmp_path / "a")
+    queries = synth_queries(15)
 
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         a = build_index(corpus, a_path, mode="code", n_splits=8, n_groups=2,
                         block_range=64, out_partitions=2)
+        want_hash, want_topk = _index_content_hash(spark, a), _topk(spark, a, queries)
         spark.conf.set("spark.sql.shuffle.partitions", "13")
-        b = build_index(corpus, b_path, mode="code", n_splits=8, n_groups=2,
-                        block_range=64, out_partitions=7)
+        for n_groups, made in [(2, 2), (1, 1), (None, 8)]:
+            b_path = str(tmp_path / f"b{n_groups}")
+            b = build_index(corpus, b_path, mode="code", n_splits=8,
+                            n_groups=n_groups, block_range=64, out_partitions=7)
+            assert len(_complete_groups(b_path)) == made
+            assert _index_content_hash(spark, b) == want_hash, n_groups
+            assert _topk(spark, b, queries) == want_topk, n_groups
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
 
-    assert _index_content_hash(spark, a) == _index_content_hash(spark, b)
-    queries = synth_queries(15)
-    assert _topk(spark, a, queries) == _topk(spark, b, queries)
+
+def test_group_count_from_input_bytes():
+    assert _n_groups_for_bytes(1_100_000) == 1
+    assert _n_groups_for_bytes(25_700_000) == 2
+    assert _n_groups_for_bytes(130_000_000) == 8
+    assert _n_groups_for_bytes(0) == 1
+    # Catalyst's "unknown size" and a session without a JVM plan
+    assert _n_groups_for_bytes(2**63 - 1) == 8
+    assert _n_groups_for_bytes(None) == 8
+
+
+def test_resume_group_count_from_markers():
+    assert _resume_n_groups([], None) is None
+    assert _resume_n_groups([], 3) == 3
+    recorded = [("0", {"n_groups": 4}), ("1", {"n_groups": 4}), ("ext0", {})]
+    assert _resume_n_groups(recorded, None) == 4
+    assert _resume_n_groups(recorded, 4) == 4
+    with pytest.raises(ValueError, match="n_groups=2.*n_groups=4"):
+        _resume_n_groups(recorded, 2)
+    # markers from before the count was recorded: the fixed default 8
+    assert _resume_n_groups([("0", {}), ("5", {})], None) == 8
+    # extension groups alone say nothing about the build's groups
+    assert _resume_n_groups([("ext0", {})], None) is None
+
+
+def test_resume_reuses_checkpoint_group_count(spark, tmp_path):
+    """A resume without n_groups reuses the count the checkpoints were
+    written with; an explicit different count is refused up front."""
+    corpus = corpus_df(spark, 40)
+    path = str(tmp_path / "idx")
+    kw = dict(mode="code", n_splits=8, block_range=64, out_partitions=4)
+    fresh = build_index(corpus, path, n_groups=4, **kw)
+    want = _index_content_hash(spark, fresh)
+    for entry in os.listdir(path):
+        if entry != "_stage1":
+            p = os.path.join(path, entry)
+            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    shutil.rmtree(os.path.join(path, "_stage1", "group=3"))
+
+    with pytest.raises(ValueError, match="n_groups=2.*n_groups=4"):
+        build_index(corpus, path, resume=True, n_groups=2, **kw)
+    resumed = build_index(corpus, path, resume=True, **kw)
+    assert [g for g, _m in _complete_groups(path)] == ["0", "1", "2", "3"]
+    assert all(m["n_groups"] == 4 for _g, m in _complete_groups(path))
+    assert _index_content_hash(spark, resumed) == want
 
 
 def test_resume_refuses_forked_input(spark, tmp_path):

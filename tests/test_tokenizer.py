@@ -90,8 +90,8 @@ def test_corpus_from_files_binary_scan(spark, tmp_path):
 
 
 def test_tfmap_fast_path_matches_counter():
-    """The distinct-raw tfmap fast path (r6 optimization) must produce
-    the exact Counter(tokenize_*) maps on every mode and edge shape."""
+    """The build path's tfmap functions must produce the exact
+    Counter(tokenize_*) maps on every mode and edge shape."""
     from collections import Counter
 
     from flatnav_spark.tokenizer import (tfmap_code, tfmap_simple,
