@@ -127,14 +127,14 @@ def main():
     # the r6 production shape: driver-sampled boundaries, expression
     # routing, chunk_id never shuffled
     from flatnav_spark.build import _group_docs_paths
-    from flatnav_spark.partitioning import (repartition_term_chunk_range,
+    from flatnav_spark.partitioning import (repartition_at_bounds,
                                             sample_term_chunk_boundaries)
     bounds = sample_term_chunk_boundaries(
         _group_docs_paths(out_dir), out_partitions, chunk_span)
     chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
     sc.setJobDescription("s2_sampled_sort")
     timed("s2_sampled_sort", lambda: noop(
-        repartition_term_chunk_range(tf_all, bounds, chunk_col=chunk_of)
+        repartition_at_bounds(tf_all, bounds, "term", chunk_of)
         .sortWithinPartitions("term", "doc_id").select(*sel)))
 
     from pyspark.sql import types as T

@@ -604,16 +604,11 @@ def _stats_range_partition(term_stats, bounds, stats_parts: int):
     (already proportional to posting mass, which tracks vocabulary mass
     closely enough for a table this small) down to the stats partition
     count. Falls back to repartitionByRange when no boundaries exist."""
-    from flatnav_spark.partitioning import repartition_term_range
+    from flatnav_spark.partitioning import fold_to_terms, repartition_at_bounds
 
-    if bounds:
-        terms = sorted({t for t, _c in bounds})
-        if len(terms) >= stats_parts:
-            idx = [(i + 1) * len(terms) // stats_parts
-                   for i in range(stats_parts - 1)]
-            terms = sorted({terms[i] for i in idx})
-        if terms:
-            return repartition_term_range(term_stats, terms)
+    terms = fold_to_terms(bounds, stats_parts)
+    if terms:
+        return repartition_at_bounds(term_stats, terms, "term")
     return term_stats.repartitionByRange(stats_parts, "term")
 
 
@@ -624,7 +619,7 @@ def _docs_range_partition(docs_all, metas, out_partitions: int):
     key-space bound costs no job. Falls back to repartitionByRange only
     for legacy markers lacking max_doc_id."""
     from flatnav_spark.partitioning import (MAX_TOKEN_ROUTE_PARTS,
-                                            repartition_exact_dense_range)
+                                            repartition_dense_range)
 
     if out_partitions > MAX_TOKEN_ROUTE_PARTS:  # plan-size guard
         return docs_all.repartitionByRange(out_partitions, "doc_id")
@@ -635,7 +630,7 @@ def _docs_range_partition(docs_all, metas, out_partitions: int):
         if meta["max_doc_id"] is not None:
             ids.append(int(meta["max_doc_id"]))
     hi = max(ids) + 1 if ids else 1
-    return repartition_exact_dense_range(docs_all, "doc_id", hi, out_partitions)
+    return repartition_dense_range(docs_all, "doc_id", hi, out_partitions)
 
 
 def _stage2(spark, out_path, mode, params, block_range, n_splits,
@@ -729,7 +724,7 @@ def _stage2(spark, out_path, mode, params, block_range, n_splits,
     # real exchange scans it again — the entire stage-2 input computed
     # twice (measured ~11 s of the 50 s merge at zipf:200k; guide §2.4).
     from flatnav_spark.partitioning import (
-        repartition_term_chunk_range, sample_term_chunk_boundaries)
+        repartition_at_bounds, sample_term_chunk_boundaries)
 
     bounds = sample_term_chunk_boundaries(group_paths, out_partitions, chunk_span)
     chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
@@ -737,7 +732,7 @@ def _stage2(spark, out_path, mode, params, block_range, n_splits,
         # chunk_id stays an EXPRESSION through the exchange (monotone in
         # doc_id, so sorting (term, doc_id) IS the (term, chunk_id,
         # doc_id) order) — 8 B/row less shuffle width
-        part = repartition_term_chunk_range(tf_all, bounds, chunk_col=chunk_of)
+        part = repartition_at_bounds(tf_all, bounds, "term", chunk_of)
     else:  # sample too small to trust (tiny corpus): one sampled pass is cheap
         part = tf_all.withColumn("chunk_id", chunk_of).repartitionByRange(
             out_partitions, "term", "chunk_id").drop("chunk_id")
@@ -1177,13 +1172,13 @@ def _append_generation(spark, out_path: str, m: IndexManifest,
 
     def _docs_layout(df):
         from flatnav_spark.partitioning import (MAX_TOKEN_ROUTE_PARTS,
-                                                repartition_exact_dense_range)
+                                                repartition_dense_range)
 
         if not have_window or docs_parts > MAX_TOKEN_ROUTE_PARTS:
             return df.repartitionByRange(docs_parts, "doc_id")
         lo = min(v for v in lo_ids if v is not None)
         hi = max(v for v in hi_ids if v is not None) + 1
-        return repartition_exact_dense_range(
+        return repartition_dense_range(
             df, "doc_id", hi - lo, docs_parts, lo=lo)
 
     def _write_docs():
@@ -1206,13 +1201,12 @@ def _append_generation(spark, out_path: str, m: IndexManifest,
     # sampling job would re-execute the generation's read+explode child —
     # one of the fixed jobs in extend's floor
     from flatnav_spark.partitioning import (
-        repartition_term_chunk_range, sample_term_chunk_boundaries)
+        repartition_at_bounds, sample_term_chunk_boundaries)
 
     gen_bounds = sample_term_chunk_boundaries(group_paths, out_partitions, chunk_span)
     gen_chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
     if gen_bounds is not None:
-        gen_part = repartition_term_chunk_range(tf_new, gen_bounds,
-                                                chunk_col=gen_chunk_of)
+        gen_part = repartition_at_bounds(tf_new, gen_bounds, "term", gen_chunk_of)
     else:
         gen_part = tf_new.withColumn("chunk_id", gen_chunk_of).repartitionByRange(
             out_partitions, "term", "chunk_id").drop("chunk_id")

@@ -40,23 +40,6 @@ from flatnav_spark.index_io import LoadedIndex
 LAYOUT_STRATEGIES = ("term", "doc")
 
 
-def _recover_postings_swap(index_path: str) -> None:
-    """Make optimize_index crash-safe to re-run: if a previous run died
-    between the two renames, postings/ is missing but postings__old has
-    the intact pre-optimize table — restore it. Stale temp/old dirs from
-    any other crash point are deleted."""
-    import shutil
-
-    postings = os.path.join(index_path, "postings")
-    old = os.path.join(index_path, "postings__old")
-    tmp = os.path.join(index_path, "postings__optimizing")
-    if not os.path.exists(postings) and os.path.exists(old):
-        os.rename(old, postings)
-    for stale in (old, tmp):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-
-
 def optimize_index(spark, index: LoadedIndex, out_partitions: Optional[int] = None,
                    strategy: str = "term") -> LoadedIndex:
     """Rewrite the postings table with a fresh clustered layout
@@ -77,7 +60,6 @@ def optimize_index(spark, index: LoadedIndex, out_partitions: Optional[int] = No
     if out_partitions is None:
         out_partitions = max(spark.sparkContext.defaultParallelism // 2, 4)
 
-    _recover_postings_swap(index.path)
     # operate on the ON-DISK state (the caller may hold a stale handle)
     caller_manifest = index.manifest
     m = IndexManifest.load(index.path)
@@ -88,14 +70,14 @@ def optimize_index(spark, index: LoadedIndex, out_partitions: Optional[int] = No
     # byte-weighted boundaries sampled driver-side from the generation
     # files themselves (payload_len is stored per segment row), instead
     # of repartitionByRange's sampling job re-reading every generation
-    from flatnav_spark.partitioning import (repartition_pair_range,
+    from flatnav_spark.partitioning import (repartition_at_bounds,
                                             sample_segment_key_boundaries)
 
     bounds = sample_segment_key_boundaries(
         [os.path.join(index.path, d) for d in m.postings_dirs],
         out_partitions, keys=tuple(keys))
     src = index.postings(spark)  # union of every generation
-    part = (repartition_pair_range(src, bounds, *keys) if bounds is not None
+    part = (repartition_at_bounds(src, bounds, *keys) if bounds is not None
             else src.repartitionByRange(out_partitions, *keys))
     (
         part.sortWithinPartitions(*keys)

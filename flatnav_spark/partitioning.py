@@ -1,19 +1,28 @@
-"""Zero-job exact range partitioning for dense integer keys.
+"""Zero-job exact range partitioning: dense integer keys and sampled
+boundaries.
 
 ``repartitionByRange`` costs a full sampling pass over its CHILD plan —
 the range partitioner runs a reservoir-sample job to pick boundaries. On
 the query hot path the child is (postings scan -> term filter), so the
 sampling job re-reads and re-filters the postings before the real
-exchange does: the whole input is scanned twice per query batch. That is
-tolerable for one-off builds, and a measurable fixed tax per query pass
-(the round-4 qps regression vs round 2 on the documents corpus).
+exchange does: the whole input is scanned twice per query batch. In the
+build the child is the stage-1 read+explode (or the positions UDF, or a
+stats outer join), computed twice for the same reason.
 
-For the query path we know more than the generic range partitioner does:
-chunk ids are DENSE integers in [0, n_chunks) (chunk_id = doc_id //
-chunk_span, doc ids are dense by construction — build.py B3). So exact,
-contiguous, count-balanced ranges need no sampling at all:
+When the partition id of a row is computable from the row, no sampling is
+needed. Two routers cover every caller:
 
-    pid = key * P // n_keys            (contiguous ranges, sizes +/- 1)
+- :func:`repartition_dense_range` — chunk and doc ids are DENSE integers
+  (chunk_id = doc_id // chunk_span, doc ids are dense by construction —
+  build.py B3), so exact, contiguous, count-balanced ranges are
+
+      pid = (key - lo) * P // n_keys     (contiguous ranges, sizes +/- 1)
+
+- :func:`repartition_at_bounds` — string (or mixed) keys: boundaries are
+  sampled DRIVER-SIDE from a few part files
+  (:func:`sample_term_chunk_boundaries`,
+  :func:`sample_segment_key_boundaries`) and each row's pid is an
+  O(log P) WHEN-tree search over them.
 
 The only obstacle is that Spark's DataFrame API exposes hash
 partitioning, not partition-by-expression-value: ``repartition(P, col)``
@@ -28,11 +37,6 @@ bit-for-bit against Spark's ``F.hash`` and unit-tested against it). Then
 ``repartition(P, element_at(tokens, pid+1))`` IS an exact manual range
 partitioner: every pid lands alone in its own bucket, zero extra jobs,
 deterministic at any parallelism.
-
-At very large n_keys (cluster scale: millions of chunks onto thousands
-of tasks) plain hash partitioning on the key is already balanced by the
-law of large numbers, so the helper falls back to it — the token array
-stays small in every regime where it is used.
 """
 
 from __future__ import annotations
@@ -79,11 +83,6 @@ def murmur3_long(value: int, seed: int = 42) -> int:
 
 _TOKEN_CACHE: Dict[int, List[int]] = {}
 
-# above this ratio of keys to partitions, plain hash partitioning is
-# balanced by the law of large numbers (expected max/mean load -> 1) and
-# the token array is not worth materializing in the plan
-HASH_FALLBACK_KEYS_PER_PART = 64
-
 # token-routed exact range partitioning materializes a P-element long
 # array plus an O(log P) WHEN-tree in the plan; past ~4096 partitions the
 # literals dwarf codegen budgets (Spark falls back to interpreted
@@ -98,8 +97,7 @@ MAX_TOKEN_ROUTE_PARTS = 4096
 def bucket_tokens(p: int) -> List[int]:
     """tokens[i] = smallest non-negative long whose Spark hash lands in
     partition i of p. Coupon-collector search, ~p*ln(p) murmur3 calls,
-    cached per p (sub-second up to p ~ 10^4; larger p uses hash
-    fallback)."""
+    cached per p (sub-second up to p ~ 10^4)."""
     if p not in _TOKEN_CACHE:
         found: Dict[int, int] = {}
         v = 0
@@ -112,34 +110,110 @@ def bucket_tokens(p: int) -> List[int]:
     return _TOKEN_CACHE[p]
 
 
-def repartition_exact_dense_range(df, col: str, n_keys: int, num_partitions: int,
-                                  lo: int = 0):
-    """Like :func:`repartition_dense_range` but ALWAYS exact contiguous
-    ranges (no hash fallback) — for writers that must produce a
-    range-partitioned on-disk layout (e.g. the docs table's doc_id-ordered
-    files), where hash placement would destroy file-level min/max pruning.
-    ``lo`` shifts the key window: keys are treated as dense in
-    [lo, lo + n_keys) (extend generations start at a chunk boundary, not
-    0). The token array grows with ``num_partitions`` only (~8 B/partition
-    in the plan), fine through ~10^4 output partitions; beyond that a real
-    cluster would shard the write per key range instead."""
+def _route(df, p: int, pid):
+    """Repartition ``df`` into ``p`` partitions, row to partition ``pid``
+    (an int Column in [0, p)) — through the token array, so each pid
+    lands alone in its own bucket."""
     from pyspark.sql import functions as F
 
-    p = max(1, min(num_partitions, n_keys))
     if p == 1:
         return df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-    toks = bucket_tokens(p)
-    pid = F.least(
-        F.expr(f"CAST((({col} - {int(lo)}) * {p}) DIV {n_keys} AS INT)"),
-        F.lit(p - 1),
-    )
     tok = F.element_at(
-        F.array(*[F.lit(t).cast("long") for t in toks]), pid + F.lit(1)
+        F.array(*[F.lit(t).cast("long") for t in bucket_tokens(p)]), pid + F.lit(1)
     )
     # pass the token as an EXPRESSION, not a materialized column: the
     # exchange then carries only the data columns (the partition id is
     # computed map-side and never stored), saving 8 B/row of shuffle width
     return df.repartition(p, tok)
+
+
+def repartition_dense_range(df, col: str, n_keys: int, num_partitions: int,
+                            lo: int = 0):
+    """Exact contiguous-range repartition of ``df`` on a dense integer
+    key column in [lo, lo + n_keys): task t receives keys lo + [t*n_keys/P,
+    (t+1)*n_keys/P) — the layout repartitionByRange(P, col) would
+    produce, with ZERO extra jobs and deterministic boundaries at any
+    parallelism. Keys past the window (a stale upper bound) clamp into the
+    last range rather than erroring. ``lo`` is nonzero for extend
+    generations, whose ids start at a chunk boundary. Range placement also
+    keeps file-level min/max pruning for writers (the docs table's
+    doc_id-ordered files). The token array grows with the partition count
+    only (~8 B/partition in the plan)."""
+    from pyspark.sql import functions as F
+
+    p = max(1, min(num_partitions, n_keys))
+    pid = F.least(
+        F.expr(f"CAST((({col} - {int(lo)}) * {p}) DIV {n_keys} AS INT)"),
+        F.lit(p - 1),
+    )
+    return _route(df, p, pid)
+
+
+def _pid_bsearch(bounds, ge_of):
+    """Balanced WHEN-tree binary search: expression evaluating to the
+    number of boundaries <= the row's key — i.e. the partition id in
+    [0, len(bounds)]. ``ge_of(b)`` builds the key >= b predicate.
+    O(log P) comparisons per row instead of O(P)."""
+    from pyspark.sql import functions as F
+
+    def rec(lo, hi):
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(ge_of(bounds[mid]), rec(mid + 1, hi)).otherwise(rec(lo, mid))
+
+    return rec(0, len(bounds))
+
+
+def repartition_at_bounds(df, bounds, *keys):
+    """Exact range repartition of ``df`` at precomputed sorted boundaries:
+    partition i holds keys in [bounds[i-1], bounds[i]) — the contiguous
+    sorted layout ``repartitionByRange`` produces, with ZERO extra jobs.
+    One key takes scalar boundaries, two keys take (k1, k2) tuples compared
+    lexicographically. A key is a column name or a Column EXPRESSION (e.g.
+    stage 2's chunk id derived from doc_id), so a derived key need not be
+    materialized — callers keep it out of the shuffled row and recompute
+    it after the exchange."""
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    cols = [k if isinstance(k, Column) else F.col(k) for k in keys]
+    if len(cols) == 1:
+        (c1,) = cols
+
+        def ge_of(b):
+            return c1 >= F.lit(b)
+    else:
+        c1, c2 = cols
+
+        def ge_of(b):
+            b1, b2 = b
+            return (c1 > F.lit(b1)) | ((c1 == F.lit(b1)) & (c2 >= F.lit(b2)))
+
+    return _route(df, len(bounds) + 1, _pid_bsearch(bounds, ge_of))
+
+
+def _sample_files(dirs, per_dir: int, num_partitions: int):
+    """Up to ``per_dir`` parquet files from each directory, striped evenly
+    through its sorted listing (splits are hash-assigned, so any file
+    subset is an unbiased sample). None — caller falls back to
+    repartitionByRange — when there are no files, or past
+    MAX_TOKEN_ROUTE_PARTS (plan-size guard).
+
+    Local-filesystem implementation; on an object store the same few-file
+    sample would go through the storage client."""
+    import glob as _glob
+
+    if num_partitions > MAX_TOKEN_ROUTE_PARTS:
+        return None
+    files = []
+    for d in dirs:
+        fs = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+        k = min(len(fs), per_dir)
+        if k:
+            step = len(fs) / k
+            files += [fs[int(i * step)] for i in range(k)]
+    return files or None
 
 
 def sample_term_chunk_boundaries(group_paths, num_partitions: int,
@@ -155,17 +229,14 @@ def sample_term_chunk_boundaries(group_paths, num_partitions: int,
 
     Every tfmap key of a sampled doc is one future posting row, so the
     sampled (term, doc_id // chunk_span) pairs estimate the posting-count
-    CDF over the range key directly. Files are striped evenly through each
-    group's sorted listing (splits are hash-assigned, so any file subset
-    is an unbiased corpus sample). Returns a sorted, deduplicated list of
-    (term, chunk_id) boundaries (may be shorter than num_partitions - 1
+    CDF over the range key directly. Returns a sorted, deduplicated list
+    of (term, chunk_id) boundaries (may be shorter than num_partitions - 1
     when hot keys collapse quantiles), or None when the sample is too
     small to trust — callers fall back to repartitionByRange.
 
-    Local-filesystem implementation; on an object store the same few-file
-    sample would go through the storage client."""
-    import glob as _glob
-
+    The TERM at each quantile position of a (term, chunk) sort does not
+    depend on the chunk key, so :func:`fold_to_terms` of these bounds is
+    the term-only boundary list at any ``chunk_span``."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -173,16 +244,8 @@ def sample_term_chunk_boundaries(group_paths, num_partitions: int,
 
     if num_partitions <= 1:
         return []
-    if num_partitions > MAX_TOKEN_ROUTE_PARTS:
-        return None  # plan-size guard: caller uses repartitionByRange
-    files = []
-    for gp in group_paths:
-        fs = sorted(_glob.glob(os.path.join(gp, "*.parquet")))
-        k = min(len(fs), files_per_group)
-        if k:
-            step = len(fs) / k
-            files += [fs[int(i * step)] for i in range(k)]
-    if not files:
+    files = _sample_files(group_paths, files_per_group, num_partitions)
+    if files is None:
         return None
     terms_parts = []
     chunks_parts = []
@@ -229,20 +292,19 @@ def sample_term_chunk_boundaries(group_paths, num_partitions: int,
     return bounds
 
 
-def sample_term_boundaries(group_paths, num_partitions: int,
-                           files_per_group: int = 2,
-                           min_rows_per_part: int = 64):
-    """Term-only range boundaries from the stage-1 sample — for writers
-    laying out (term, ...) tables whose row count tracks posting mass
-    (e.g. the positions artifact's (term, doc_id) rows, cardinality
-    identical to the postings). Degenerate chunk span folds every sampled
-    pair to chunk 0, so the quantiles are over terms alone."""
-    bounds = sample_term_chunk_boundaries(
-        group_paths, num_partitions, 1 << 62, files_per_group,
-        min_rows_per_part)
-    if bounds is None:
-        return None
-    return sorted({t for t, _c in bounds})
+def fold_to_terms(bounds, num_partitions: int | None = None) -> List[str]:
+    """Term-only boundaries from (term, chunk) boundaries (None reads as
+    none) — for writers laying out (term, ...) tables: the positions
+    artifact, whose (term, doc_id) rows track posting mass, and the stats
+    table. With ``num_partitions`` the terms are evenly subsampled to at
+    most num_partitions - 1 boundaries (the stats table is written at a
+    quarter of the postings' partition count)."""
+    terms = sorted({t for t, _c in bounds or []})
+    if num_partitions is not None and len(terms) >= num_partitions:
+        idx = [(i + 1) * len(terms) // num_partitions
+               for i in range(num_partitions - 1)]
+        terms = sorted({terms[i] for i in idx})
+    return terms
 
 
 def sample_segment_key_boundaries(dir_paths, num_partitions: int,
@@ -257,8 +319,6 @@ def sample_segment_key_boundaries(dir_paths, num_partitions: int,
     rewrite should balance). Replaces repartitionByRange's sampling
     re-read of every generation. Returns sorted (k1, k2) boundary tuples
     or None (caller falls back)."""
-    import glob as _glob
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -266,16 +326,8 @@ def sample_segment_key_boundaries(dir_paths, num_partitions: int,
 
     if num_partitions <= 1:
         return []
-    if num_partitions > MAX_TOKEN_ROUTE_PARTS:
-        return None  # plan-size guard: caller uses repartitionByRange
-    files = []
-    for dp in dir_paths:
-        fs = sorted(_glob.glob(os.path.join(dp, "*.parquet")))
-        k = min(len(fs), files_per_dir)
-        if k:
-            step = len(fs) / k
-            files += [fs[int(i * step)] for i in range(k)]
-    if not files:
+    files = _sample_files(dir_paths, files_per_dir, num_partitions)
+    if files is None:
         return None
     tabs = [pq.read_table(f, columns=[*keys, weight_col]) for f in files]
     # checked before the concat: all-empty files give no chunks, and a
@@ -302,132 +354,3 @@ def sample_segment_key_boundaries(dir_paths, num_partitions: int,
     k1 = tbl.column(keys[0]).take(pa.array(picked)).to_pylist()
     k2 = tbl.column(keys[1]).take(pa.array(picked)).to_pylist()
     return sorted(set(zip(k1, k2)))
-
-
-def repartition_pair_range(df, bounds, c1: str, c2: str):
-    """Exact range repartition on a two-column key at precomputed
-    boundaries — the generic form of :func:`repartition_term_chunk_range`
-    (works for any comparable literal key types, either column order)."""
-    from pyspark.sql import functions as F
-
-    p = len(bounds) + 1
-    if p == 1:
-        return df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-
-    def ge_of(b):
-        b1, b2 = b
-        return (F.col(c1) > F.lit(b1)) | (
-            (F.col(c1) == F.lit(b1)) & (F.col(c2) >= F.lit(b2))
-        )
-
-    toks = bucket_tokens(p)
-    pid = _pid_bsearch(bounds, ge_of)
-    tok = F.element_at(
-        F.array(*[F.lit(t).cast("long") for t in toks]), pid + F.lit(1)
-    )
-    return df.repartition(p, tok)
-
-
-def _pid_bsearch(bounds, ge_of):
-    """Balanced WHEN-tree binary search: expression evaluating to the
-    number of boundaries <= the row's key — i.e. the partition id in
-    [0, len(bounds)]. ``ge_of(b)`` builds the key >= b predicate.
-    O(log P) comparisons per row instead of O(P)."""
-    from pyspark.sql import functions as F
-
-    def rec(lo, hi):
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(ge_of(bounds[mid]), rec(mid + 1, hi)).otherwise(rec(lo, mid))
-
-    return rec(0, len(bounds))
-
-
-def repartition_term_chunk_range(df, bounds, term_col: str = "term",
-                                 chunk_col="chunk_id"):
-    """Exact range repartition of ``df`` on (term, chunk_id) at the given
-    precomputed boundaries (from :func:`sample_term_chunk_boundaries`):
-    partition i holds keys in [bounds[i-1], bounds[i]) — the identical
-    contiguous term-sorted layout ``repartitionByRange`` produces, with
-    ZERO extra jobs. Routing = O(log P) string compares per row + the
-    murmur3 token trick (see module docstring) for exact pid -> partition
-    placement. ``chunk_col`` may be a Column EXPRESSION (e.g. derived
-    from doc_id) so the chunk id need not be materialized — callers can
-    keep it out of the shuffled row entirely and recompute it after the
-    exchange."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    p = len(bounds) + 1
-    if p == 1:
-        return df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-    chunk_expr = chunk_col if isinstance(chunk_col, Column) else F.col(chunk_col)
-
-    def ge_of(b):
-        bt, bc = b
-        return (F.col(term_col) > F.lit(bt)) | (
-            (F.col(term_col) == F.lit(bt)) & (chunk_expr >= F.lit(bc))
-        )
-
-    toks = bucket_tokens(p)
-    pid = _pid_bsearch(bounds, ge_of)
-    tok = F.element_at(
-        F.array(*[F.lit(t).cast("long") for t in toks]), pid + F.lit(1)
-    )
-    # pass the token as an EXPRESSION, not a materialized column: the
-    # exchange then carries only the data columns (the partition id is
-    # computed map-side and never stored), saving 8 B/row of shuffle width
-    return df.repartition(p, tok)
-
-
-def repartition_term_range(df, term_bounds, term_col: str = "term"):
-    """Exact range repartition on a single string column at precomputed
-    term boundaries — the stats-table twin of
-    :func:`repartition_term_chunk_range`."""
-    from pyspark.sql import functions as F
-
-    p = len(term_bounds) + 1
-    if p == 1:
-        return df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-
-    def ge_of(bt):
-        return F.col(term_col) >= F.lit(bt)
-
-    toks = bucket_tokens(p)
-    pid = _pid_bsearch(term_bounds, ge_of)
-    tok = F.element_at(
-        F.array(*[F.lit(t).cast("long") for t in toks]), pid + F.lit(1)
-    )
-    # pass the token as an EXPRESSION, not a materialized column: the
-    # exchange then carries only the data columns (the partition id is
-    # computed map-side and never stored), saving 8 B/row of shuffle width
-    return df.repartition(p, tok)
-
-
-def repartition_dense_range(df, col: str, n_keys: int, num_partitions: int):
-    """Exact contiguous-range repartition of ``df`` on a dense integer
-    key column in [0, n_keys): task t receives keys [t*n_keys/P,
-    (t+1)*n_keys/P) — the same layout repartitionByRange(P, col) would
-    produce, with ZERO extra jobs and deterministic boundaries at any
-    parallelism. Keys >= n_keys (a stale upper bound) clamp into the last
-    range rather than erroring."""
-    from pyspark.sql import functions as F
-
-    p = max(1, min(num_partitions, n_keys))
-    if p == 1:
-        return df.coalesce(1) if df.rdd.getNumPartitions() > 1 else df
-    if n_keys >= HASH_FALLBACK_KEYS_PER_PART * p:
-        # many keys per task: hash is balanced, no token table needed
-        return df.repartition(p, col)
-    toks = bucket_tokens(p)
-    pid = F.least(
-        F.expr(f"CAST(({col} * {p}) DIV {n_keys} AS INT)"), F.lit(p - 1)
-    )
-    tok = F.element_at(
-        F.array(*[F.lit(t).cast("long") for t in toks]), pid + F.lit(1)
-    )
-    # pass the token as an EXPRESSION, not a materialized column: the
-    # exchange then carries only the data columns (the partition id is
-    # computed map-side and never stored), saving 8 B/row of shuffle width
-    return df.repartition(p, tok)

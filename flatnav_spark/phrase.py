@@ -111,13 +111,16 @@ def build_positions(spark, corpus, index: LoadedIndex,
     # UDF + groupBy, i.e. the entire (expensive) positions computation,
     # twice (r6; guide §2.4). Boundaries come from the same stage-1 file
     # sample the postings merge uses ((term, doc) cardinality equals the
-    # postings', so posting mass is the right balance estimate).
+    # postings', so posting mass is the right balance estimate), folded to
+    # their terms.
     from flatnav_spark.build import _group_docs_paths
-    from flatnav_spark.partitioning import (repartition_term_range,
-                                            sample_term_boundaries)
+    from flatnav_spark.partitioning import (fold_to_terms, repartition_at_bounds,
+                                            sample_term_chunk_boundaries)
 
-    tb = sample_term_boundaries(_group_docs_paths(index.path), out_partitions)
-    part = (repartition_term_range(agg, tb) if tb
+    tb = fold_to_terms(sample_term_chunk_boundaries(
+        _group_docs_paths(index.path), out_partitions,
+        m.block_range * m.chunk_blocks))
+    part = (repartition_at_bounds(agg, tb, "term") if tb
             else agg.repartitionByRange(out_partitions, "term"))
     (
         part.sortWithinPartitions("term", "doc_id")

@@ -6,10 +6,13 @@ blocks, and the per-query state is a numpy top-k heap per task.
 
 Plan shape — ONE shuffle on the hot path, no join:
 
-  1. tokenize queries with the index's tokenizer (same UDF as build),
-     join term_stats for df — the query-term table is tiny (bounded by the
-     query batch), so it is collected and closure-broadcast to every task,
-     the analog of flatnav's shared read-only index + per-thread queries.
+  1. resolve query terms on the driver (_resolve_query_terms): collect
+     the query texts, tokenize them with the index's tokenizer (the same
+     pure function the build's UDF wraps), and look up df from the
+     preloaded stats cache or one filtered stats read — the query-term
+     table is tiny (bounded by the query batch) and is closure-broadcast
+     to every task, the analog of flatnav's shared read-only index +
+     per-thread queries.
   2. postings scan filtered to the batch's terms — literal ``term IN``
      for small sets, broadcast LEFT SEMI join + [min,max] range predicate
      above LARGE_TERM_SET (row-group pruning on the term-sorted layout
@@ -62,7 +65,6 @@ from flatnav_spark.codec import varint_decode
 from flatnav_spark.index_io import LoadedIndex
 from flatnav_spark.partitioning import repartition_dense_range
 from flatnav_spark.scorer import get_scorer
-from flatnav_spark.tokenizer import make_tokenize_udf
 
 # multiplicative + absolute inflation of upper bounds: guards against
 # summation-order float drift between the metadata-side bound and the
@@ -187,8 +189,8 @@ def _make_partition_scorer(
     unit), and (query, block) pairs.
 
     ``seed_thr`` (round-3 VERDICT #6) pre-loads each query's threshold
-    with a GLOBAL lower bound on its final k-th score (the k-th score
-    attained on a prefix of chunks, measured by a cheap pre-pass). Without
+    with a GLOBAL lower bound on its final k-th score (the analytic floor,
+    or a threshold reused from an earlier batch). Without
     it thresholds are task-local and start at -inf, so pruning decays as
     tasks multiply (each task's top-k fills later — prune frac 0.29 at 8
     tasks -> 0.08 at 32 on zipf:1M, -> ~0 at cluster scale). A seeded
@@ -438,28 +440,6 @@ def _make_partition_scorer(
     return score_partition
 
 
-def _query_terms(spark, index: LoadedIndex, queries_df):
-    """(query_id, term, df) for query terms that exist in the index.
-
-    The broadcast of the (tiny) query-term set into the term_stats join is
-    the analog of flatnav's broadcastable entry-point stats (B4,
-    Index.h:845-870). Kept as the distributed formulation for callers
-    that hold a non-collectable queries_df; _resolve_query_terms uses the
-    driver-side form on the hot path."""
-    from pyspark.sql import functions as F
-
-    tokenize = make_tokenize_udf(index.manifest.tokenizer_mode)
-    q_terms = (
-        queries_df.select("query_id", F.explode(tokenize(F.col("query_text"))).alias("term"))
-        .distinct()
-    )
-    stats = index.term_stats(spark)
-    cols = ["query_id", "term", "df"] + [
-        c for c in ("floor_dl10", "floor_dl100") if c in stats.columns
-    ]
-    return stats.join(F.broadcast(q_terms), "term").select(*cols)
-
-
 def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
     """One column-pruned, row-group-pruned read of the stats table
     restricted to ``terms`` (sorted): literal IN below LARGE_TERM_SET,
@@ -569,10 +549,10 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
     Honest measurement (zipf:1M, k=10): the floor reaches ~12% of the true
     k-th score at the median — enough to keep some pruning alive at any
     task count, not enough to match task-local thresholds once they fill
-    (seg prune frac 0.34 at 8 tasks vs 0.10 at 32 either way). The
-    sampling pre-pass alternative measured net-negative (_seed_thresholds
-    docstring); threshold REUSE across batches (seed_thr_by_qid) is the
-    scale path for standing query services."""
+    (seg prune frac 0.34 at 8 tasks vs 0.10 at 32 either way). A
+    chunk-prefix sampling pre-pass measured net-negative there (+3.5 s at
+    N8 for +0.00 seg prune frac); threshold REUSE across batches
+    (seed_thr_by_qid) is the scale path for standing query services."""
     max_dl = int(m.metrics.get("max_dl", 0) or 0)
     if not qt_rows:
         return {}
@@ -669,16 +649,12 @@ def _n_chunks_upper(m) -> int:
 
 
 def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
-              accs, chunk_lt: Optional[int] = None,
-              seed_thr_by_qid: Optional[Dict[int, float]] = None,
+              accs, seed_thr_by_qid: Optional[Dict[int, float]] = None,
               approx_factor: float = 1.0):
     """One scoring pass over the postings for a bounded chunk of queries.
 
-    ``chunk_lt`` restricts the pass to chunks [0, chunk_lt) — the seed
-    pre-pass mode. ``seed_thr_by_qid`` maps query_id -> global threshold
-    lower bound to start every task at (see _make_partition_scorer)."""
-    from pyspark.sql import functions as F
-
+    ``seed_thr_by_qid`` maps query_id -> global threshold lower bound to
+    start every task at (see _make_partition_scorer)."""
     m = index.manifest
     scorer = get_scorer(scorer_name)
     qids = sorted({r["query_id"] for r in qt_rows})
@@ -690,11 +666,6 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
     plan = _QueryPlan(qmap)
 
     postings = _filter_postings_to_terms(spark, index.postings(spark), plan.terms)
-    n_chunks = _n_chunks_upper(m)
-    if chunk_lt is not None:
-        postings = postings.filter(F.col("chunk_id") < chunk_lt)
-        n_chunks = min(n_chunks, chunk_lt)
-        num_partitions = max(1, min(num_partitions, chunk_lt))
     seed_thr = None
     if seed_thr_by_qid:
         seed_thr = np.array(
@@ -728,44 +699,10 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
     if prune:
         cols[4:4] = ["block_max_tf", "block_min_dl"]
     part = repartition_dense_range(postings.select(*cols), "chunk_id",
-                                   n_chunks, num_partitions)
+                                   _n_chunks_upper(m), num_partitions)
     return part.sortWithinPartitions("chunk_id", "term").mapInPandas(
         part_scorer, "query_id long, doc_id long, score double"
     )
-
-
-SEED_MIN_CHUNKS = 8   # below this a seed pre-pass costs more than it saves
-SEED_PREFIX_DIV = 32  # seed prefix = n_chunks // 32 chunks (>= 1): ~3% scan
-
-
-def _seed_thresholds(spark, index, qt_rows, k, num_partitions, scorer_name,
-                     accs) -> Optional[Dict[int, float]]:
-    """Cheap global WAND seed (round-3 VERDICT #6): score a small PREFIX of
-    chunks for the whole query batch and return each query's attained k-th
-    score — a parallelism-independent lower bound on its final k-th score,
-    broadcast (via the scorer closure) as every task's starting threshold.
-    Doc ids are hash-assigned, so a doc-id prefix is an unbiased corpus
-    sample and its k-th score sits close to the global one. Cost: one
-    narrow job over ~1/SEED_PREFIX_DIV of the postings; its scored/pruned
-    work is counted in the same accumulators (the seed is not free and the
-    metrics say so)."""
-    m = index.manifest
-    span = m.block_range * m.chunk_blocks
-    n_chunks = max(1, -(-m.n_docs // span))
-    if n_chunks < SEED_MIN_CHUNKS:
-        return None
-    s = max(1, n_chunks // SEED_PREFIX_DIV)
-    part = _run_pass(spark, index, qt_rows, k, True, num_partitions,
-                     scorer_name, accs, chunk_lt=s)
-    by_q: Dict[int, List[float]] = {}
-    for r in part.collect():  # <= k rows per query per task, tasks <= s
-        by_q.setdefault(int(r.query_id), []).append(float(r.score))
-    out = {}
-    for q, scores in by_q.items():
-        if len(scores) >= k:
-            scores.sort(reverse=True)
-            out[q] = scores[k - 1]
-    return out or None
 
 
 def batch_query(
@@ -778,7 +715,6 @@ def batch_query(
     collect_metrics: bool = False,
     scorer: str = "bm25",
     max_queries_per_pass: int = DEFAULT_MAX_QUERIES_PER_PASS,
-    seed_thresholds: bool = False,
     seed_thr_by_qid: Optional[Dict[int, float]] = None,
     approx_factor: float = 1.0,
     _qt_rows=None,
@@ -793,12 +729,7 @@ def batch_query(
     executor memory regardless of batch size.
 
     With ``prune`` every task starts from the zero-cost analytic floor
-    (_score_floor_by_qid). ``seed_thresholds=True`` additionally runs the
-    chunk-prefix sampling pre-pass (_seed_thresholds) — measured NET
-    NEGATIVE on zipf:1M at k=10 (a 3%-sample k-th is a weak bound and the
-    extra scan costs more than the pruning it buys: +3.5s at N8 for +0.00
-    seg prune frac, +5s at N32 for +0.04), so it defaults off; it can pay
-    off for large k or very selective workloads.
+    (_score_floor_by_qid).
 
     ``seed_thr_by_qid`` (query_id -> score) pre-seeds per-query WAND
     thresholds with externally-known lower bounds on each query's final
@@ -846,15 +777,10 @@ def batch_query(
     for lo in range(0, len(all_qids), max_queries_per_pass):
         chunk = set(all_qids[lo: lo + max_queries_per_pass])
         rows = [r for r in qt_rows if r["query_id"] in chunk]
-        seeds = (
-            _seed_thresholds(spark, index, rows, k, num_partitions, scorer, accs)
-            if prune and seed_thresholds else None
-        )
+        seeds = None
         if prune and seed_thr_by_qid:
-            seeds = dict(seeds or {})
-            for q, thr in seed_thr_by_qid.items():
-                if q in chunk and thr > seeds.get(q, -np.inf):
-                    seeds[q] = thr
+            seeds = {q: thr for q, thr in seed_thr_by_qid.items()
+                     if q in chunk and thr > -np.inf}
         part = _run_pass(spark, index, rows, k, prune, num_partitions, scorer,
                          accs, seed_thr_by_qid=seeds,
                          approx_factor=approx_factor)

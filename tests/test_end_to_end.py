@@ -237,7 +237,7 @@ def test_wand_floor_is_valid_lower_bound(spark, built):
     k-th score — otherwise pruning would be lossy. Checks every fixture
     query against the engine's exact (prune=False) results, and that the
     index actually carries the floor statistics."""
-    from flatnav_spark.query import _query_terms, _score_floor_by_qid
+    from flatnav_spark.query import _resolve_query_terms, _score_floor_by_qid
     from flatnav_spark.scorer import get_scorer
 
     index, _corpus = built
@@ -247,7 +247,7 @@ def test_wand_floor_is_valid_lower_bound(spark, built):
 
     queries = synth_queries(N_QUERIES)
     qdf = spark.createDataFrame(queries, "query_id long, query_text string")
-    qt_rows = _query_terms(spark, index, qdf).collect()
+    qt_rows = _resolve_query_terms(spark, index, qdf)
     floors = _score_floor_by_qid(qt_rows, index.manifest, get_scorer("bm25"), K)
     assert floors, "floor should exist for at least one query"
 

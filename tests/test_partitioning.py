@@ -36,12 +36,16 @@ def test_bucket_tokens_land_in_their_bucket(spark):
             assert r.b == r.i
 
 
-def test_repartition_dense_range_contiguous_and_balanced(spark):
-    n_keys, p = 37, 8
-    df = spark.range(0, 50 * n_keys).select(
-        (F.col("id") % n_keys).alias("key"), F.col("id").alias("payload")
+@pytest.mark.parametrize("lo", [0, 4096])
+@pytest.mark.parametrize("n_keys,reps", [(37, 50), (8 * 64 + 5, 3)])
+def test_repartition_dense_range_contiguous_and_balanced(spark, lo, n_keys, reps):
+    # 37 keys: a few per task; 517 keys: >= 64 per task, the regime plain
+    # hash partitioning was once used for
+    p = 8
+    df = spark.range(0, reps * n_keys).select(
+        (F.col("id") % n_keys + lo).alias("key"), F.col("id").alias("payload")
     )
-    out = repartition_dense_range(df, "key", n_keys, p)
+    out = repartition_dense_range(df, "key", n_keys, p, lo=lo)
     assert "_range_tok" not in out.columns
     got = (
         out.withColumn("pid", F.spark_partition_id())
@@ -55,13 +59,13 @@ def test_repartition_dense_range_contiguous_and_balanced(spark):
     assert len(got) == p
     assert sum(r.nk for r in got) == n_keys
     assert {r.nk for r in got} <= {n_keys // p, n_keys // p + 1}
-    prev_hi = -1
+    prev_hi = lo - 1
     for r in got:
         assert r.lo == prev_hi + 1  # contiguous, disjoint
         prev_hi = r.hi
-    assert prev_hi == n_keys - 1
+    assert prev_hi == lo + n_keys - 1
     # rows preserved
-    assert out.count() == 50 * n_keys
+    assert out.count() == reps * n_keys
 
 
 def test_repartition_dense_range_clamps_stale_bound(spark):
@@ -79,31 +83,18 @@ def test_repartition_dense_range_clamps_stale_bound(spark):
     assert got[-1].n == 2 + 10
 
 
-def test_repartition_dense_range_hash_fallback(spark):
-    # n_keys >> partitions: plain hash path, still every row present
-    df = spark.range(0, 10000).select((F.col("id") % 2000).alias("key"))
-    out = repartition_dense_range(df, "key", 2000, 4)
-    assert out.count() == 10000
-    # a key's rows never split across tasks (hash on the key column)
-    split = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("key").agg(F.countDistinct("pid").alias("np"))
-        .filter("np > 1").count()
-    )
-    assert split == 0
-
-
 def test_sampled_term_chunk_range_matches_repartition_by_range(spark, tmp_path):
     """r6 optimization: the driver-side sampled-boundary range partitioner
     replacing stage 2's repartitionByRange must (a) keep every (term,
     chunk_id) group whole in one partition, (b) produce contiguous
-    ascending ranges across partition ids, and (c) yield a postings table
+    ascending ranges across partition ids — also for the one-key (term)
+    form at the folded term boundaries, and (c) yield a postings table
     with identical ROWS to a build forced down the repartitionByRange
     fallback (file layout may differ; content must not)."""
     from flatnav_spark.build import _group_docs_paths, build_index
     from flatnav_spark.corpus import synth_corpus
     from flatnav_spark.partitioning import (
-        repartition_term_chunk_range, sample_term_chunk_boundaries)
+        fold_to_terms, repartition_at_bounds, sample_term_chunk_boundaries)
 
     rows = synth_corpus(1200)
     corpus = spark.createDataFrame(
@@ -124,18 +115,22 @@ def test_sampled_term_chunk_range_matches_repartition_by_range(spark, tmp_path):
     keyed = combined.select(
         "doc_id", F.explode("tfmap").alias("term", "tf")
     ).withColumn("chunk_id", (F.col("doc_id") / (64 * 2)).cast("long"))
-    placed = (
-        repartition_term_chunk_range(keyed, bounds)
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid", "term", "chunk_id").collect()
-    )
-    per_pid = {}
-    for r in placed:
-        per_pid.setdefault(r.pid, []).append((r.term, r.chunk_id))
-    ranges = {pid: (min(v), max(v)) for pid, v in per_pid.items()}
-    ordered = [ranges[pid] for pid in sorted(ranges)]
-    for (lo1, hi1), (lo2, hi2) in zip(ordered, ordered[1:]):
-        assert hi1 < lo2  # contiguous, non-overlapping, ascending
+    terms = fold_to_terms(bounds)
+    assert len(terms) > 1
+    for cut, keys in ((bounds, ("term", "chunk_id")), (terms, ("term",))):
+        placed = (
+            repartition_at_bounds(keyed, cut, *keys)
+            .withColumn("pid", F.spark_partition_id())
+            .select("pid", *keys).collect()
+        )
+        per_pid = {}
+        for r in placed:
+            per_pid.setdefault(r.pid, []).append(tuple(r[k] for k in keys))
+        assert len(per_pid) == len(cut) + 1
+        ranges = {pid: (min(v), max(v)) for pid, v in per_pid.items()}
+        ordered = [ranges[pid] for pid in sorted(ranges)]
+        for (lo1, hi1), (lo2, hi2) in zip(ordered, ordered[1:]):
+            assert hi1 < lo2  # contiguous, non-overlapping, ascending
 
     # (c): forced fallback build produces identical postings rows
     import flatnav_spark.partitioning as part_mod
@@ -152,6 +147,50 @@ def test_sampled_term_chunk_range_matches_repartition_by_range(spark, tmp_path):
     rows_b = sorted(map(tuple, idx_b.postings(spark).select(*cols).collect()))
     assert rows_a == rows_b
 
+
+def test_folded_term_boundaries_ignore_chunk_span(tmp_path):
+    """The term at each quantile position of a (term, chunk) sort does not
+    depend on the chunk key, so folding the sampled (term, chunk) bounds to
+    their terms gives one list at any chunk span — the term-only layouts
+    (positions, stats) reuse the stage-2 sample instead of a sampler of
+    their own."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flatnav_spark.partitioning import (fold_to_terms,
+                                            sample_term_chunk_boundaries)
+
+    rng = np.random.default_rng(3)
+    vocab = [f"t{i:03d}" for i in range(300)]
+    groups = []
+    doc_id = 0
+    for g in range(2):
+        d = tmp_path / f"group={g}"
+        d.mkdir()
+        for f in range(3):
+            maps = []
+            for _ in range(40):
+                terms = rng.choice(len(vocab), size=rng.integers(1, 30),
+                                   replace=False)
+                maps.append([(vocab[t], int(rng.integers(1, 5))) for t in terms])
+            ids = np.arange(doc_id, doc_id + len(maps), dtype=np.int64)
+            doc_id += len(maps)
+            pq.write_table(pa.table({
+                "doc_id": pa.array(ids),
+                "tfmap": pa.array(maps, pa.map_(pa.string(), pa.int32())),
+            }), str(d / f"part-{f}.parquet"))
+        groups.append(str(d))
+
+    for parts in (4, 9):
+        by_span = [sample_term_chunk_boundaries(groups, parts, span)
+                   for span in (1, 7, 1 << 62)]
+        assert all(b for b in by_span)
+        assert by_span[0] != by_span[2]  # the chunk keys do differ ...
+        folded = [fold_to_terms(b) for b in by_span]
+        assert folded[0] == folded[1] == folded[2]  # ... their terms do not
+        assert len(folded[0]) > 1
+        assert fold_to_terms(by_span[0], 2) == [folded[0][len(folded[0]) // 2]]
 
 
 @pytest.mark.parametrize("zero_chunk_reader", [False, True])
