@@ -349,7 +349,8 @@ def run_bench(sf_dir: str, cpus: int, n_queries: int, k: int,
     if n_lat:
         # standing-service configuration (the reference latency protocol is
         # repeated single queries): one-time stats preload, excluded from
-        # per-query timing, makes each query_one a single Spark job
+        # per-query timing; a query_one whose pass sizes to one task then
+        # runs no Spark job (larger ones run one)
         index.preload_term_stats(spark)
     lat = []
     for _qid, qtext in queries[:n_lat]:

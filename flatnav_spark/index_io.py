@@ -116,13 +116,14 @@ class LoadedIndex:
         self._stats_cache = None  # term -> stats dict (preload_term_stats)
 
     def preload_term_stats(self, spark) -> int:
-        """Opt-in driver-side cache of the term-stats table for the
-        query_one latency fast path (one Spark job instead of two per
-        query: the tokenize+stats-join job is replaced by a dict lookup).
-        Costs one scan now plus ~100 B of driver memory per term — right
-        for standing single-query services on vocabularies up to ~10^7
-        terms; batch_query never needs it (its stats join is amortized
-        over the batch). Returns the number of cached terms."""
+        """Driver-side cache of the term-stats table: query-term stats
+        resolve by dict lookup instead of a filtered stats read (a Spark
+        job) per call, so a query_one whose pass sizes to one task runs
+        no Spark job at all. Costs one scan now plus ~100 B of driver
+        memory per term; query.AUTO_PRELOAD_MAX_TERMS arms it
+        automatically on the first query against vocabularies below that
+        cap, and standing services call it up front. Returns the number
+        of cached terms."""
         # Arrow collect (toPandas) instead of the row-based collect():
         # materializing 10^5-10^6 Row objects driver-side was the slow
         # part of arming the cache (r6; guide §6 Arrow-for-driver-transfers)

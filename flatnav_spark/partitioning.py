@@ -138,10 +138,13 @@ def repartition_dense_range(df, col: str, n_keys: int, num_partitions: int,
     generations, whose ids start at a chunk boundary. Range placement also
     keeps file-level min/max pruning for writers (the docs table's
     doc_id-ordered files). The token array grows with the partition count
-    only (~8 B/partition in the plan)."""
+    only (~8 B/partition in the plan), so the count is clamped to
+    MAX_TOKEN_ROUTE_PARTS as well as to ``n_keys``: build and extend fall
+    back before they reach the cap, and a query pass asked for more
+    partitions gets wider contiguous ranges."""
     from pyspark.sql import functions as F
 
-    p = max(1, min(num_partitions, n_keys))
+    p = max(1, min(num_partitions, n_keys, MAX_TOKEN_ROUTE_PARTS))
     pid = F.least(
         F.expr(f"CAST((({col} - {int(lo)}) * {p}) DIV {n_keys} AS INT)"),
         F.lit(p - 1),

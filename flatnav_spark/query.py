@@ -32,6 +32,16 @@ Plan shape — ONE shuffle on the hot path, no join:
      final window row_number() over (score desc, doc_id asc) <= k — the
      Q4 sort+truncate analog (Index.h:402-406) with explicit tie-breaking.
 
+A pass that sizes itself to ONE task (_pass_partitions: the batch's
+summed query-term df is at most TARGET_POSTINGS_PER_TASK) skips steps 2-4
+as Spark work and runs on the driver instead (_run_pass_driver): pyarrow
+reads the query terms' postings rows straight from the parquet files,
+sorts them by (chunk_id, term), and the same kernel scores them as that
+one task would — zero Spark jobs, the embedded-Arrow-engine pattern
+(DataFusion, SIGMOD 2024). One task saw every chunk, so each query's
+top-k is final and is ranked on the driver; ``batch_query`` is then
+eager and returns a local DataFrame of the ranked rows.
+
 Scoring is pluggable (flatnav_spark.scorer.SCORERS — the L2/IP
 distance-interface analog): the index stores raw (tf, dl, df), so BM25 and
 TF-IDF-IP both run against one index, selected per query batch.
@@ -56,6 +66,8 @@ skipped entirely while no query has a full top-k yet, so pruning costs
 
 from __future__ import annotations
 
+import os
+from functools import reduce
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -648,10 +660,13 @@ def _n_chunks_upper(m) -> int:
     return max(1, -(-hi // span))
 
 
-def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
-              accs, seed_thr_by_qid: Optional[Dict[int, float]] = None,
-              approx_factor: float = 1.0):
-    """One scoring pass over the postings for a bounded chunk of queries.
+def _pass_prologue(index, qt_rows, k, prune, scorer_name, accs,
+                   seed_thr_by_qid: Optional[Dict[int, float]] = None,
+                   approx_factor: float = 1.0):
+    """What both pass executors share: the query plan, the seeded WAND
+    thresholds (reused seeds max-combined with the analytic floor), the
+    chunk kernel and the postings columns it reads. Returns
+    (plan, kernel, cols).
 
     ``seed_thr_by_qid`` maps query_id -> global threshold lower bound to
     start every task at (see _make_partition_scorer)."""
@@ -665,7 +680,6 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
         qmap.setdefault(r["term"], []).append((q_index[r["query_id"]], w))
     plan = _QueryPlan(qmap)
 
-    postings = _filter_postings_to_terms(spark, index.postings(spark), plan.terms)
     seed_thr = None
     if seed_thr_by_qid:
         seed_thr = np.array(
@@ -681,6 +695,28 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
         m.block_range, m.chunk_blocks, k, prune, *accs, seed_thr=seed_thr,
         approx_factor=approx_factor,
     )
+    # Project to the columns the kernel actually reads (guide §4: Spark
+    # cannot see inside mapInPandas, so unused columns — n, sum_tf,
+    # payload_len, max_dl, and the two block-bound arrays on the exact
+    # path — would be scanned, shuffled and serialized to Python for
+    # nothing).
+    cols = ["term", "chunk_id", "block_ids", "block_counts",
+            "docs_bin", "tfs_bin", "dls_bin"]
+    if prune:
+        cols[4:4] = ["block_max_tf", "block_min_dl"]
+    return plan, part_scorer, cols
+
+
+def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
+              accs, seed_thr_by_qid: Optional[Dict[int, float]] = None,
+              approx_factor: float = 1.0):
+    """One scoring pass over the postings for a bounded chunk of queries,
+    as a Spark job of ``num_partitions`` tasks: a lazy DataFrame of
+    per-task top-k candidates (query_id, doc_id, score)."""
+    plan, part_scorer, cols = _pass_prologue(
+        index, qt_rows, k, prune, scorer_name, accs, seed_thr_by_qid,
+        approx_factor)
+    postings = _filter_postings_to_terms(spark, index.postings(spark), plan.terms)
     # Contiguous RANGE partitioning, not hash: with n_chunks within a
     # small factor of the task count, hash collisions leave some tasks
     # with 2-4x the chunks of others. repartitionByRange would balance
@@ -689,20 +725,53 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
     # vs round 2); chunk ids are dense, so repartition_dense_range
     # computes the same contiguous ranges exactly, with zero extra jobs,
     # deterministic at any parallelism (flatnav_spark/partitioning.py).
-    # Project to the columns the kernel actually reads BEFORE the
-    # exchange and the Arrow hop (guide §4: Spark cannot see inside
-    # mapInPandas, so unused columns — n, sum_tf, payload_len, max_dl,
-    # and the two block-bound arrays on the exact path — would be
-    # scanned, shuffled and serialized to Python for nothing).
-    cols = ["term", "chunk_id", "block_ids", "block_counts",
-            "docs_bin", "tfs_bin", "dls_bin"]
-    if prune:
-        cols[4:4] = ["block_max_tf", "block_min_dl"]
+    # The projection goes BEFORE the exchange and the Arrow hop.
     part = repartition_dense_range(postings.select(*cols), "chunk_id",
-                                   _n_chunks_upper(m), num_partitions)
+                                   _n_chunks_upper(index.manifest),
+                                   num_partitions)
     return part.sortWithinPartitions("chunk_id", "term").mapInPandas(
         part_scorer, "query_id long, doc_id long, score double"
     )
+
+
+def _run_pass_driver(index, qt_rows, k, prune, scorer_name, accs,
+                     seed_thr_by_qid: Optional[Dict[int, float]] = None,
+                     approx_factor: float = 1.0) -> pd.DataFrame:
+    """The same pass with no Spark job, for a pass sized to one task:
+    pyarrow reads the query terms' postings rows straight from the
+    parquet files (one dataset per postings generation — a single
+    dataset over several directories is refused), sorts them into the
+    (chunk_id, term) order the Spark task would see, and the unchanged
+    kernel scores them as that one task. Strings order by UTF-8 bytes in
+    both engines, so the top-k and its float64 scores are identical.
+    Returns the candidates (query_id, doc_id, score) as pandas; the
+    WAND counters are added on the driver."""
+    import pyarrow.dataset as ds
+
+    plan, part_scorer, cols = _pass_prologue(
+        index, qt_rows, k, prune, scorer_name, accs, seed_thr_by_qid,
+        approx_factor)
+    src = ds.dataset([ds.dataset(os.path.join(index.path, d), format="parquet")
+                      for d in index.manifest.postings_dirs])
+    tbl = src.to_table(columns=cols, filter=ds.field("term").isin(plan.terms))
+    tbl = tbl.sort_by([("chunk_id", "ascending"), ("term", "ascending")])
+    return next(part_scorer([tbl.to_pandas()]))
+
+
+def _ranked(cand: pd.DataFrame, k: int) -> List[Tuple[int, int, int, float]]:
+    """(query_id, rank, doc_id, score) rows from (query_id, doc_id, score)
+    candidates: per query, the first k in (score desc, doc_id asc) order —
+    the final window's order, applied on the driver."""
+    out: List[Tuple[int, int, int, float]] = []
+    rank, last = 0, None
+    for q, s, d in sorted(zip(cand["query_id"].tolist(), cand["score"].tolist(),
+                              cand["doc_id"].tolist()),
+                          key=lambda t: (t[0], -t[1], t[2])):
+        rank = rank + 1 if q == last else 1
+        last = q
+        if rank <= k:
+            out.append((q, rank, d, s))
+    return out
 
 
 def batch_query(
@@ -730,6 +799,13 @@ def batch_query(
 
     With ``prune`` every task starts from the zero-cost analytic floor
     (_score_floor_by_qid).
+
+    The pass partition count is resolved once for the whole batch. When
+    it is 1 (explicit, or sized from a small batch's postings volume),
+    every pass runs on the driver with no Spark job and the call is
+    EAGER: the ranked rows come back as a local DataFrame, and the WAND
+    accumulators already hold their totals. Larger batches return the
+    lazy Spark plan, as before.
 
     ``seed_thr_by_qid`` (query_id -> score) pre-seeds per-query WAND
     thresholds with externally-known lower bounds on each query's final
@@ -773,7 +849,8 @@ def batch_query(
     )
 
     all_qids = sorted({r["query_id"] for r in qt_rows})
-    cand = None
+    on_driver = num_partitions == 1
+    parts = []
     for lo in range(0, len(all_qids), max_queries_per_pass):
         chunk = set(all_qids[lo: lo + max_queries_per_pass])
         rows = [r for r in qt_rows if r["query_id"] in chunk]
@@ -781,17 +858,30 @@ def batch_query(
         if prune and seed_thr_by_qid:
             seeds = {q: thr for q, thr in seed_thr_by_qid.items()
                      if q in chunk and thr > -np.inf}
-        part = _run_pass(spark, index, rows, k, prune, num_partitions, scorer,
-                         accs, seed_thr_by_qid=seeds,
-                         approx_factor=approx_factor)
-        cand = part if cand is None else cand.unionByName(part)
+        if on_driver:
+            parts.append(_run_pass_driver(index, rows, k, prune, scorer, accs,
+                                          seed_thr_by_qid=seeds,
+                                          approx_factor=approx_factor))
+        else:
+            parts.append(_run_pass(spark, index, rows, k, prune, num_partitions,
+                                   scorer, accs, seed_thr_by_qid=seeds,
+                                   approx_factor=approx_factor))
 
-    w_final = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    result = (
-        cand.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "doc_id", "score")
-    )
+    if on_driver:
+        # one "task" saw every chunk: each query's candidates are final
+        result = spark.createDataFrame(
+            _ranked(pd.concat(parts), k),
+            "query_id long, rank int, doc_id long, score double")
+    else:
+        cand = reduce(lambda a, b: a.unionByName(b), parts)
+        w_final = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                                         F.asc("doc_id"))
+        result = (
+            cand.withColumn("rank", F.row_number().over(w_final))
+            .filter(F.col("rank") <= k)
+            .select("query_id", F.col("rank").cast("int").alias("rank"),
+                    "doc_id", "score")
+        )
     if collect_metrics:
         result._flatnav_accumulators = {
             "blocks_scored": accs[0],
@@ -1010,15 +1100,15 @@ def query_one(spark, index: LoadedIndex, query_text: str, k: int = 10,
     """Single-query convenience — the ``searchSingle`` analog
     (bindings.cpp:121-159): returns [(rank, doc_id, score)], collected.
 
-    Latency fast path: skips batch_query's final window (one whole Spark
-    job) by collecting the per-task top-k candidates (≤ k rows per task)
-    and merging driver-side with the identical (score desc, doc_id asc)
-    order — bit-identical to batch_query (tested). Two Spark jobs total;
-    ONE if ``index.preload_term_stats(spark)`` was called first: the
-    tokenizer is a pure function (tokenizer.py), so the query's terms and
-    their stats resolve driver-side from the cache with no job at all —
-    the standing-service configuration. The latency harness in bench.py
-    times repeated calls of this."""
+    Latency fast path: the query's terms and their stats resolve on the
+    driver (tokenizer.py is a pure function; the stats come from the
+    preloaded cache, armed automatically below AUTO_PRELOAD_MAX_TERMS),
+    and a pass sized to one task — the usual single query — is scored on
+    the driver by _run_pass_driver: ZERO Spark jobs. A larger pass runs
+    as one Spark job whose per-task top-k candidates (≤ k rows per task)
+    are collected. Either way the merge uses batch_query's (score desc,
+    doc_id asc) order, so results are bit-identical to it (tested). The
+    latency harness in bench.py times repeated calls of this."""
     get_scorer(scorer)
     if approx_factor < 1.0:
         raise ValueError(
@@ -1026,15 +1116,14 @@ def query_one(spark, index: LoadedIndex, query_text: str, k: int = 10,
     qt_rows = _qt_rows_driver(spark, index, [(0, query_text)])
     if not qt_rows:
         return []
-    part = _run_pass(spark, index, qt_rows, k, prune,
-                     _pass_partitions(spark, qt_rows, None), scorer,
-                     (None,) * 6,
-                     seed_thr_by_qid=(
-                         {0: float(seed_thr)} if prune and seed_thr is not None
-                         else None),
-                     approx_factor=approx_factor)
-    cand = sorted(
-        ((float(r.score), int(r.doc_id)) for r in part.collect()),
-        key=lambda t: (-t[0], t[1]),
-    )[:k]
-    return [(rank + 1, doc_id, score) for rank, (score, doc_id) in enumerate(cand)]
+    seeds = {0: float(seed_thr)} if prune and seed_thr is not None else None
+    p = _pass_partitions(spark, qt_rows, None)
+    if p == 1:
+        cand = _run_pass_driver(index, qt_rows, k, prune, scorer, (None,) * 6,
+                                seed_thr_by_qid=seeds,
+                                approx_factor=approx_factor)
+    else:
+        cand = _run_pass(spark, index, qt_rows, k, prune, p, scorer,
+                         (None,) * 6, seed_thr_by_qid=seeds,
+                         approx_factor=approx_factor).toPandas()
+    return [(rank, d, s) for _, rank, d, s in _ranked(cand, k)]

@@ -49,7 +49,8 @@ class StandingQueryService:
 
     ``search_batch`` answers a batch and feeds each answered query's k-th
     score back into the threshold cache; ``search_one`` is the
-    single-query latency path (one Spark job with the preloaded stats).
+    single-query latency path (no Spark job when its pass sizes to one
+    task — query.query_one).
     ``thr_cache_size`` bounds driver memory: the cache evicts oldest
     entries FIFO past the cap (a threshold is a pure optimization — an
     evicted entry only costs prune efficiency on its next repeat)."""
@@ -141,8 +142,10 @@ class StandingQueryService:
         return out
 
     def search_one(self, query_text: str) -> List[Tuple[int, int, float]]:
-        """Single-query latency path: one Spark job (preloaded stats),
-        threshold-seeded when the text repeats, cache updated after."""
+        """Single-query latency path: stats from the preloaded cache and,
+        when the pass sizes to one task, scored on the driver with no
+        Spark job (else one job); threshold-seeded when the text repeats,
+        cache updated after."""
         self._check_index()
         hits = query_one(
             self.spark, self.index, query_text, k=self.k, prune=self.prune,

@@ -1,0 +1,162 @@
+"""A scoring pass sized to one task runs on the driver (pyarrow reader +
+the unchanged chunk kernel) instead of as a Spark job. It must return
+the Spark path's top-k rank for rank with identical float64 scores, keep
+the WAND counters, and run no Spark job for a preloaded query_one."""
+
+import shutil
+
+import pytest
+
+from flatnav_spark.build import build_index, extend_index
+from flatnav_spark.corpus import corpus_df, synth_corpus, synth_queries
+from flatnav_spark.index_io import load_index
+from flatnav_spark.maintenance import optimize_index
+from flatnav_spark.query import (
+    _pass_partitions,
+    _ranked,
+    _resolve_query_terms,
+    _run_pass,
+    batch_query,
+    query_one,
+)
+
+SCHEMA = "repo string, path string, commit string, lang string, content string"
+ZIPF_QUERIES = ["vaaaaaaa0 import", "vbaaaaaa0", "def return self",
+                "vcaaaaaa0 vdaaaaaa0", "parseIndex mergeBuffer",
+                "vaeaaaaa0 class"]
+NO_TERMS = "zzqqnotindexed"
+
+
+@pytest.fixture(scope="module")
+def indexes(spark, tmp_path_factory):
+    from flatnav_spark.corpus import synth_zipf_corpus
+
+    root = tmp_path_factory.mktemp("driver_pass")
+    fixture = build_index(corpus_df(spark, 300), str(root / "fixture"),
+                          mode="code", n_splits=16, n_groups=4,
+                          block_range=64, out_partitions=4)
+    zipf = build_index(
+        spark.createDataFrame(
+            synth_zipf_corpus(3000, n_terms=20000, median_dl=80), SCHEMA),
+        str(root / "zipf"), mode="code", n_splits=8, n_groups=1,
+        block_range=64, chunk_blocks=4, out_partitions=4)
+    rows = synth_corpus(120, seed=5)
+    ext = build_index(spark.createDataFrame(rows[:80], SCHEMA),
+                      str(root / "ext"), mode="code", n_splits=8, n_groups=2,
+                      block_range=64, out_partitions=4)
+    extend_index(spark, ext, spark.createDataFrame(rows[80:], SCHEMA),
+                 out_partitions=4)
+    assert len(ext.manifest.postings_dirs) == 2
+    shutil.copytree(root / "ext", root / "opt")
+    opt = optimize_index(spark, load_index(str(root / "opt")), out_partitions=2)
+    assert len(opt.manifest.postings_dirs) == 1
+    synth = [t for _, t in synth_queries(12)] + [NO_TERMS]
+    return {
+        "fixture": (fixture, synth),
+        "zipf": (zipf, ZIPF_QUERIES + [NO_TERMS]),
+        "extended": (ext, synth),
+        "optimized": (opt, synth),
+    }
+
+
+def _qdf(spark, texts):
+    return spark.createDataFrame(list(enumerate(texts)),
+                                 "query_id long, query_text string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _assert_one_task(spark, index, qdf):
+    qt_rows = _resolve_query_terms(spark, index, qdf)
+    assert _pass_partitions(spark, qt_rows, None) == 1
+    return qt_rows
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf_ip"])
+@pytest.mark.parametrize("name", ["fixture", "zipf", "extended", "optimized"])
+def test_driver_pass_rank_identical_to_spark(spark, indexes, name, scorer):
+    index, texts = indexes[name]
+    k = 5
+    qdf = _qdf(spark, texts)
+    _assert_one_task(spark, index, qdf)
+    exact = _rows(batch_query(spark, index, qdf, k=k, prune=False,
+                              scorer=scorer, num_partitions=3))
+    assert exact
+    # seeds as a standing service caches them: each query's attained k-th
+    kth = {q: s for q, r, _, s in exact if r == k}
+    assert kth
+    for prune, seeds in ((False, None), (True, None), (True, kth)):
+        kw = dict(k=k, prune=prune, scorer=scorer, seed_thr_by_qid=seeds)
+        driver = _rows(batch_query(spark, index, qdf, **kw))
+        spark_p3 = _rows(batch_query(spark, index, qdf, num_partitions=3, **kw))
+        assert driver == spark_p3 == exact, (prune, seeds is not None)
+    # query_one takes the same driver pass
+    for qid, text in enumerate(texts):
+        want = [(r, d, s) for q, r, d, s in exact if q == qid]
+        assert query_one(spark, index, text, k=k, scorer=scorer,
+                         seed_thr=kth.get(qid)) == want
+
+
+@pytest.mark.parametrize("name", ["zipf", "extended"])
+def test_driver_pass_approx_matches_one_spark_task(spark, indexes, name):
+    # theta > 1 prunes on task-local thresholds, so p = 3 may differ; one
+    # Spark task sees the same rows in the same order as the driver
+    index, texts = indexes[name]
+    k = 5
+    qdf = _qdf(spark, texts)
+    qt_rows = _assert_one_task(spark, index, qdf)
+    for theta in (1.5, 3.0):
+        driver = _rows(batch_query(spark, index, qdf, k=k, approx_factor=theta))
+        cand = _run_pass(spark, index, qt_rows, k, True, 1, "bm25", (None,) * 6,
+                         approx_factor=theta).toPandas()
+        assert driver == _ranked(cand, k)
+
+
+def test_empty_term_queries(spark, indexes):
+    index, _ = indexes["fixture"]
+    assert batch_query(spark, index, _qdf(spark, [NO_TERMS])).collect() == []
+    assert query_one(spark, index, NO_TERMS) == []
+
+
+def test_driver_pass_keeps_wand_counters(spark, indexes):
+    # every chunk is scored in exactly one task, so per-grain totals
+    # (scored + pruned) do not depend on how chunks split across tasks
+    index, texts = indexes["zipf"]
+    qdf = _qdf(spark, texts)
+    _assert_one_task(spark, index, qdf)
+    totals = []
+    for p in (None, 3):
+        res = batch_query(spark, index, qdf, k=5, num_partitions=p,
+                          collect_metrics=True)
+        res.collect()
+        v = {n: int(a.value) for n, a in res._flatnav_accumulators.items()}
+        totals.append({g: v[f"{g}_scored"] + v[f"{g}_pruned"]
+                       for g in ("blocks", "segments", "pairs")})
+        if p is None:
+            assert v["pairs_pruned"] > 0
+    assert totals[0] == totals[1]
+    assert totals[0]["pairs"] > 0
+
+
+def test_preloaded_query_one_runs_no_spark_job(spark, indexes):
+    index, _ = indexes["fixture"]
+    index.preload_term_stats(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("driver-pass-query-one", "query_one")
+        hits = query_one(spark, index, "import mergeIndex", k=5)
+        # control: a Spark pass in another group is seen by the tracker
+        sc.setJobGroup("driver-pass-control", "batch_query p=3")
+        batch_query(spark, index, _qdf(spark, ["import mergeIndex"]), k=5,
+                    num_partitions=3).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        index._stats_cache = None
+    assert hits
+    assert list(tracker.getJobIdsForGroup("driver-pass-query-one")) == []
+    assert list(tracker.getJobIdsForGroup("driver-pass-control"))

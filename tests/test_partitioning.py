@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flatnav_spark.partitioning import (
+    MAX_TOKEN_ROUTE_PARTS,
     bucket_tokens,
     murmur3_long,
     repartition_dense_range,
@@ -66,6 +67,18 @@ def test_repartition_dense_range_contiguous_and_balanced(spark, lo, n_keys, reps
     assert prev_hi == lo + n_keys - 1
     # rows preserved
     assert out.count() == reps * n_keys
+
+
+def test_repartition_dense_range_caps_token_route_parts(spark):
+    # an explicit request above the plan-size guard (a query pass with
+    # num_partitions=5000 over 10k chunk ids) routes through at most
+    # MAX_TOKEN_ROUTE_PARTS token buckets (checked on the plan: running
+    # 4096 shuffle tasks would only time the local scheduler; building
+    # the 4096-literal token array alone takes seconds over Py4J)
+    assert MAX_TOKEN_ROUTE_PARTS == 4096
+    df = spark.range(0, 10_000).select(F.col("id").alias("key"))
+    out = repartition_dense_range(df, "key", 10_000, 5000)
+    assert out.rdd.getNumPartitions() == MAX_TOKEN_ROUTE_PARTS
 
 
 def test_repartition_dense_range_clamps_stale_bound(spark):

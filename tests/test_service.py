@@ -108,17 +108,22 @@ def test_extend_under_live_service_drops_caches(spark, tmp_path):
     assert before[0] != after[0] or index.manifest.n_docs == 100
 
 
-def test_batch_query_preloaded_stats_bit_identical(spark, zidx):
+def test_batch_query_preloaded_stats_bit_identical(spark, zidx, monkeypatch):
     """_resolve_query_terms: the zero-job driver-side stats resolution must
-    return bit-identical batches to the distributed stats join, for both
-    the pruned and exact paths."""
+    return bit-identical batches to the filtered stats read, for both the
+    pruned and exact paths."""
     qdf = spark.createDataFrame(QUERIES, "query_id long, query_text string")
     for prune in (True, False):
         zidx._stats_cache = None
-        cold = sorted(
-            (r.query_id, r.rank, r.doc_id, r.score)
-            for r in batch_query(spark, zidx, qdf, k=5, prune=prune).collect()
-        )
+        # below AUTO_PRELOAD_MAX_TERMS the cold leg would arm the cache
+        # itself; a zero cap keeps it on _stats_rows_for_terms
+        with monkeypatch.context() as mp:
+            mp.setattr("flatnav_spark.query.AUTO_PRELOAD_MAX_TERMS", 0)
+            cold = sorted(
+                (r.query_id, r.rank, r.doc_id, r.score)
+                for r in batch_query(spark, zidx, qdf, k=5, prune=prune).collect()
+            )
+            assert zidx._stats_cache is None
         zidx.preload_term_stats(spark)
         fast = sorted(
             (r.query_id, r.rank, r.doc_id, r.score)
