@@ -7,8 +7,9 @@ blocks, and the per-query state is a numpy top-k heap per task.
 Plan shape — ONE shuffle on the hot path, no join:
 
   1. resolve query terms on the driver (_resolve_query_terms): collect
-     the query texts, tokenize them with the index's tokenizer (the same
-     pure function the build's UDF wraps), and look up df from the
+     the query texts (one job if the frame was built from a Python list),
+     tokenize them with the index's tokenizer (the same pure function the
+     build's UDF wraps), and look up df from the
      preloaded stats cache or one filtered stats read — the query-term
      table is tiny (bounded by the query batch) and is closure-broadcast
      to every task, the analog of flatnav's shared read-only index +
@@ -40,7 +41,8 @@ sorts them by (chunk_id, term), and the same kernel scores them as that
 one task would — zero Spark jobs, the embedded-Arrow-engine pattern
 (DataFusion, SIGMOD 2024). One task saw every chunk, so each query's
 top-k is final and is ranked on the driver; ``batch_query`` is then
-eager and returns a local DataFrame of the ranked rows.
+eager and returns the ranked rows as an Arrow-built LocalRelation
+(collected with no job).
 
 Scoring is pluggable (flatnav_spark.scorer.SCORERS — the L2/IP
 distance-interface analog): the index stores raw (tf, dl, df), so BM25 and
@@ -477,16 +479,15 @@ def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
 
 def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
     """qt_rows for a query batch, resolved DRIVER-SIDE: the tokenizer is
-    a pure function (tokenizer.py), so query texts collect (job-free for
-    the usual local-relation batch), tokenize on the driver, and their
-    stats come from either the preloaded cache (standing services — zero
-    jobs) or ONE narrow filtered read of the term-stats table. The old
-    formulation ran the tokenizer as an ArrowEvalPython node inside a
-    stats-join job — a Python-worker round trip per batch for work the
-    driver does in microseconds (guide §4: eliminate the boundary, not
-    just vectorize it). Row order differs from the join form but scoring
-    is order-invariant (each (term, query) contribution lands in its own
-    accumulator slot); rank-identity is pinned by tests."""
+    a pure function (tokenizer.py), so query texts collect, tokenize on
+    the driver, and their stats come from either the preloaded cache
+    (standing services — zero jobs) or ONE narrow filtered read of the
+    term-stats table. The collect is job-free only for a LocalRelation
+    (built from pyarrow, or pandas with Arrow on): a list-built frame is
+    a LogicalRDD whose collect is one job (1.9 s of process-tree CPU for
+    100 rows, 4 cores). Row order differs from a stats join's, but
+    scoring is order-invariant (each (term, query) contribution lands in
+    its own accumulator slot); rank-identity is pinned by tests."""
     pairs = [
         (r.query_id, r.query_text)
         for r in queries_df.select("query_id", "query_text").collect()
@@ -774,6 +775,17 @@ def _ranked(cand: pd.DataFrame, k: int) -> List[Tuple[int, int, int, float]]:
     return out
 
 
+def _local_result(spark, rows: List[Tuple[int, int, int, float]]):
+    """batch_query's result over ranked driver rows, as an Arrow-built
+    LocalRelation: collecting it runs no Spark job."""
+    import pyarrow as pa
+
+    schema = pa.schema([("query_id", pa.int64()), ("rank", pa.int32()),
+                        ("doc_id", pa.int64()), ("score", pa.float64())])
+    return spark.createDataFrame(pa.table(list(zip(*rows)) or [[]] * 4,
+                                          schema=schema))
+
+
 def batch_query(
     spark,
     index: LoadedIndex,
@@ -803,9 +815,11 @@ def batch_query(
     The pass partition count is resolved once for the whole batch. When
     it is 1 (explicit, or sized from a small batch's postings volume),
     every pass runs on the driver with no Spark job and the call is
-    EAGER: the ranked rows come back as a local DataFrame, and the WAND
-    accumulators already hold their totals. Larger batches return the
-    lazy Spark plan, as before.
+    EAGER: the ranked rows come back as a LocalRelation built from a
+    pyarrow.Table (collected with no job), and the WAND accumulators
+    already hold their totals. Larger batches return the lazy Spark
+    plan, as before. A ``queries_df`` built from pyarrow (or pandas, with
+    Arrow conversion on) collects with no job; a list-built one costs one.
 
     ``seed_thr_by_qid`` (query_id -> score) pre-seeds per-query WAND
     thresholds with externally-known lower bounds on each query's final
@@ -840,7 +854,7 @@ def batch_query(
     qt_rows = (_qt_rows if _qt_rows is not None
                else _resolve_query_terms(spark, index, queries_df))
     if not qt_rows:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
+        return _local_result(spark, [])
     num_partitions = _pass_partitions(spark, qt_rows, num_partitions)
 
     accs = tuple(
@@ -869,9 +883,7 @@ def batch_query(
 
     if on_driver:
         # one "task" saw every chunk: each query's candidates are final
-        result = spark.createDataFrame(
-            _ranked(pd.concat(parts), k),
-            "query_id long, rank int, doc_id long, score double")
+        result = _local_result(spark, _ranked(pd.concat(parts), k))
     else:
         cand = reduce(lambda a, b: a.unionByName(b), parts)
         w_final = Window.partitionBy("query_id").orderBy(F.desc("score"),

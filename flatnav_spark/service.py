@@ -35,7 +35,7 @@ from __future__ import annotations
 from typing import Dict, List, Optional, Tuple
 
 from flatnav_spark.index_io import LoadedIndex
-from flatnav_spark.query import batch_query, query_one
+from flatnav_spark.query import _qt_rows_driver, batch_query, query_one
 
 
 def _index_stamp(index: LoadedIndex) -> tuple:
@@ -49,8 +49,8 @@ class StandingQueryService:
 
     ``search_batch`` answers a batch and feeds each answered query's k-th
     score back into the threshold cache; ``search_one`` is the
-    single-query latency path (no Spark job when its pass sizes to one
-    task — query.query_one).
+    single-query latency path. On a preloaded index neither runs a Spark
+    job when its pass sizes to one task (the driver pass in query.py).
     ``thr_cache_size`` bounds driver memory: the cache evicts oldest
     entries FIFO past the cap (a threshold is a pure optimization — an
     evicted entry only costs prune efficiency on its next repeat)."""
@@ -112,18 +112,19 @@ class StandingQueryService:
         """Answer [(query_id, query_text)] -> {query_id: [(rank, doc_id,
         score)]}. Repeat texts are seeded from the threshold cache; every
         answered query updates it. Results are bit-identical to a cold
-        batch_query (the seed is a true lower bound; tested)."""
+        batch_query (the seed is a true lower bound; tested). The pairs go
+        straight to the term resolver, so a one-task batch on a preloaded
+        index runs no Spark job."""
         self._check_index()
-        qdf = self.spark.createDataFrame(
-            queries, "query_id long, query_text string")
         seeds = {
             qid: self._thr[text] for qid, text in queries if text in self._thr
         }
         res = batch_query(
-            self.spark, self.index, qdf, k=self.k, prune=self.prune,
+            self.spark, self.index, None, k=self.k, prune=self.prune,
             num_partitions=self.num_partitions, scorer=self.scorer,
             collect_metrics=collect_metrics, seed_thr_by_qid=seeds or None,
             approx_factor=self.approx_factor,
+            _qt_rows=_qt_rows_driver(self.spark, self.index, queries),
         )
         rows = res.collect()
         if collect_metrics:

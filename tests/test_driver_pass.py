@@ -1,10 +1,12 @@
 """A scoring pass sized to one task runs on the driver (pyarrow reader +
 the unchanged chunk kernel) instead of as a Spark job. It must return
 the Spark path's top-k rank for rank with identical float64 scores, keep
-the WAND counters, and run no Spark job for a preloaded query_one."""
+the WAND counters, and run no Spark job for a preloaded query_one,
+search_batch or Arrow-fed batch_query."""
 
 import shutil
 
+import pyarrow as pa
 import pytest
 
 from flatnav_spark.build import build_index, extend_index
@@ -13,13 +15,16 @@ from flatnav_spark.index_io import load_index
 from flatnav_spark.maintenance import optimize_index
 from flatnav_spark.query import (
     _pass_partitions,
+    _qt_rows_driver,
     _ranked,
     _resolve_query_terms,
     _run_pass,
     batch_query,
     query_one,
 )
+from flatnav_spark.service import StandingQueryService
 
+RESULT_SCHEMA = "struct<query_id:bigint,rank:int,doc_id:bigint,score:double>"
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 ZIPF_QUERIES = ["vaaaaaaa0 import", "vbaaaaaa0", "def return self",
                 "vcaaaaaa0 vdaaaaaa0", "parseIndex mergeBuffer",
@@ -62,6 +67,27 @@ def indexes(spark, tmp_path_factory):
 def _qdf(spark, texts):
     return spark.createDataFrame(list(enumerate(texts)),
                                  "query_id long, query_text string")
+
+
+def _arrow_qdf(spark, texts):
+    # a pyarrow-built frame is a LocalRelation: collecting it runs no job
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(range(len(texts)), pa.int64()),
+        "query_text": pa.array(texts, pa.string())}))
+
+
+def _job_ids(spark, group, fn):
+    """fn() under Spark job group ``group``; returns (fn(), the group's
+    job ids as the status tracker saw them)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -143,20 +169,64 @@ def test_driver_pass_keeps_wand_counters(spark, indexes):
 def test_preloaded_query_one_runs_no_spark_job(spark, indexes):
     index, _ = indexes["fixture"]
     index.preload_term_stats(spark)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     try:
-        sc.setJobGroup("driver-pass-query-one", "query_one")
-        hits = query_one(spark, index, "import mergeIndex", k=5)
+        hits, jobs = _job_ids(spark, "driver-pass-query-one", lambda: query_one(
+            spark, index, "import mergeIndex", k=5))
         # control: a Spark pass in another group is seen by the tracker
-        sc.setJobGroup("driver-pass-control", "batch_query p=3")
-        batch_query(spark, index, _qdf(spark, ["import mergeIndex"]), k=5,
-                    num_partitions=3).collect()
+        _, control = _job_ids(spark, "driver-pass-control", lambda: batch_query(
+            spark, index, _qdf(spark, ["import mergeIndex"]), k=5,
+            num_partitions=3).collect())
     finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
         index._stats_cache = None
     assert hits
-    assert list(tracker.getJobIdsForGroup("driver-pass-query-one")) == []
-    assert list(tracker.getJobIdsForGroup("driver-pass-control"))
+    assert jobs == []
+    assert control
+
+
+def test_driver_batches_run_no_spark_job(spark, indexes):
+    index, texts = indexes["fixture"]
+    queries = list(enumerate(texts))
+    assert _pass_partitions(spark, _qt_rows_driver(spark, index, queries),
+                            None) == 1
+    svc = StandingQueryService(spark, index, k=5)  # preloads the stats
+    try:
+        cold, cold_jobs = _job_ids(spark, "driver-batch-cold",
+                                   lambda: svc.search_batch(queries))
+        assert svc.cached_thresholds > 0
+        warm, warm_jobs = _job_ids(spark, "driver-batch-seeded",
+                                   lambda: svc.search_batch(queries))
+        qdf = _arrow_qdf(spark, texts)
+        rows, batch_jobs = _job_ids(spark, "driver-batch-arrow", lambda: (
+            batch_query(spark, index, qdf, k=5).collect()))
+        none, none_jobs = _job_ids(spark, "driver-batch-unknown", lambda: (
+            svc.search_batch([(0, NO_TERMS)]),
+            batch_query(spark, index, _arrow_qdf(spark, [NO_TERMS])).collect()))
+        _, control = _job_ids(spark, "driver-batch-control", lambda: (
+            batch_query(spark, index, qdf, k=5, num_partitions=3).collect()))
+    finally:
+        index._stats_cache = None
+    assert cold and warm == cold and rows and none == ({}, [])
+    assert cold_jobs == warm_jobs == batch_jobs == none_jobs == []
+    assert control
+
+
+def test_result_schema_on_every_path(spark, indexes):
+    index, texts = indexes["fixture"]
+    qdf = _qdf(spark, texts)
+    _assert_one_task(spark, index, qdf)
+    driver = batch_query(spark, index, qdf, k=5)
+    empty = batch_query(spark, index, _qdf(spark, [NO_TERMS]))
+    spark_p3 = batch_query(spark, index, qdf, k=5, num_partitions=3)
+    for df in (driver, empty, spark_p3):
+        assert df.schema.simpleString() == RESULT_SCHEMA
+    # the Arrow-built result does not depend on Arrow conversion being on
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        arrow_off = batch_query(spark, index, qdf, k=5)
+        assert arrow_off.schema.simpleString() == RESULT_SCHEMA
+        off_rows = arrow_off.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert off_rows == driver.collect()

@@ -6,7 +6,7 @@ caches when the index is extended underneath it."""
 import pytest
 
 from flatnav_spark.build import build_index, extend_index
-from flatnav_spark.query import batch_query
+from flatnav_spark.query import _pass_partitions, _qt_rows_driver, batch_query
 from flatnav_spark.service import StandingQueryService
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -61,6 +61,39 @@ def test_repeat_batch_bit_identical_and_prunes_more(spark, zidx):
     for hits in plain.values():
         hits.sort()
     assert warm == plain
+
+
+def _by_qid(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(int(r.query_id), []).append(
+            (int(r.rank), int(r.doc_id), float(r.score)))
+    return {q: sorted(hits) for q, hits in out.items()}
+
+
+def test_driver_path_service_matches_spark_pass(spark, zidx):
+    # num_partitions left to the data: this batch sizes to one task, so
+    # search_batch hands its pairs to the driver pass
+    svc = StandingQueryService(spark, zidx, k=5)
+    assert _pass_partitions(spark, _qt_rows_driver(spark, zidx, QUERIES),
+                            None) == 1
+    cold = svc.search_batch(QUERIES, collect_metrics=True)
+    cold_m = svc.last_metrics
+    seeds = {q: svc._thr[t] for q, t in QUERIES if t in svc._thr}
+    assert seeds
+    warm = svc.search_batch(QUERIES, collect_metrics=True)
+    warm_m = svc.last_metrics
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    # same doc_ids and float64 scores as a three-task Spark pass
+    assert cold == warm == _by_qid(
+        batch_query(spark, zidx, qdf, k=5, num_partitions=3))
+    # last_metrics are the six counter totals of the same seeded batch
+    for metrics, seed in ((cold_m, None), (warm_m, seeds)):
+        res = batch_query(spark, zidx, qdf, k=5, collect_metrics=True,
+                          seed_thr_by_qid=seed)
+        res.collect()
+        assert metrics == {n: int(a.value)
+                           for n, a in res._flatnav_accumulators.items()}
 
 
 def test_search_one_seeded_repeat_identical(spark, zidx):
