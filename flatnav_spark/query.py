@@ -42,7 +42,8 @@ one task would — zero Spark jobs, the embedded-Arrow-engine pattern
 (DataFusion, SIGMOD 2024). One task saw every chunk, so each query's
 top-k is final and is ranked on the driver; ``batch_query`` is then
 eager and returns the ranked rows as an Arrow-built LocalRelation
-(collected with no job).
+(collected with no job), and StandingQueryService.search_batch takes the
+rows themselves from the shared pass loop (_batch_passes).
 
 Scoring is pluggable (flatnav_spark.scorer.SCORERS — the L2/IP
 distance-interface analog): the index stores raw (tf, dl, df), so BM25 and
@@ -740,23 +741,50 @@ def _run_pass_driver(index, qt_rows, k, prune, scorer_name, accs,
                      approx_factor: float = 1.0) -> pd.DataFrame:
     """The same pass with no Spark job, for a pass sized to one task:
     pyarrow reads the query terms' postings rows straight from the
-    parquet files (one dataset per postings generation — a single
-    dataset over several directories is refused), sorts them into the
+    parquet files of every postings generation, sorts them into the
     (chunk_id, term) order the Spark task would see, and the unchanged
     kernel scores them as that one task. Strings order by UTF-8 bytes in
     both engines, so the top-k and its float64 scores are identical.
     Returns the candidates (query_id, doc_id, score) as pandas; the
-    WAND counters are added on the driver."""
-    import pyarrow.dataset as ds
+    WAND counters are added on the driver.
+
+    The read is one file at a time on the calling thread, skipping row
+    groups whose term min/max holds no query term. pyarrow.dataset's
+    threaded scan of the same rows cost 2-3x the CPU of this read (most
+    of it in pool threads, and varying call to call) for no wall gain
+    at one task's size."""
+    import glob
+    from bisect import bisect_left
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     plan, part_scorer, cols = _pass_prologue(
         index, qt_rows, k, prune, scorer_name, accs, seed_thr_by_qid,
         approx_factor)
-    src = ds.dataset([ds.dataset(os.path.join(index.path, d), format="parquet")
-                      for d in index.manifest.postings_dirs])
-    tbl = src.to_table(columns=cols, filter=ds.field("term").isin(plan.terms))
-    tbl = tbl.sort_by([("chunk_id", "ascending"), ("term", "ascending")])
-    return next(part_scorer([tbl.to_pandas()]))
+    terms = plan.terms  # ascending
+
+    def may_hold(st) -> bool:
+        if st is None or not st.has_min_max:
+            return True
+        i = bisect_left(terms, st.min)
+        return i < len(terms) and terms[i] <= st.max
+
+    value_set = pa.array(terms, pa.string())
+    parts = []
+    for d in index.manifest.postings_dirs:
+        for f in sorted(glob.glob(os.path.join(index.path, d, "*.parquet"))):
+            pf = pq.ParquetFile(f)
+            ti = pf.schema.names.index("term")
+            groups = [g for g in range(pf.num_row_groups)
+                      if may_hold(pf.metadata.row_group(g).column(ti).statistics)]
+            if groups or not parts:  # the first read keeps the column types
+                t = pf.read_row_groups(groups, columns=cols, use_threads=False)
+                parts.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
+    tbl = pa.concat_tables(parts).sort_by([("chunk_id", "ascending"),
+                                           ("term", "ascending")])
+    return next(part_scorer([tbl.to_pandas(use_threads=False)]))
 
 
 def _ranked(cand: pd.DataFrame, k: int) -> List[Tuple[int, int, int, float]]:
@@ -839,9 +867,6 @@ def batch_query(
     exact; only completeness of the top-k set is traded. Measured:
     bench/approx_bench.py.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     get_scorer(scorer)  # validate early
     if approx_factor < 1.0:
         raise ValueError(
@@ -855,13 +880,38 @@ def batch_query(
                else _resolve_query_terms(spark, index, queries_df))
     if not qt_rows:
         return _local_result(spark, [])
+    accs = _wand_accumulators(spark, collect_metrics)
+    result = _batch_passes(spark, index, qt_rows, k, prune, num_partitions,
+                           scorer, tuple(accs.values()), max_queries_per_pass,
+                           seed_thr_by_qid, approx_factor)
+    if isinstance(result, list):
+        result = _local_result(spark, result)
+    if collect_metrics:
+        result._flatnav_accumulators = accs
+    return result
+
+
+def _wand_accumulators(spark, collect_metrics: bool) -> Dict[str, object]:
+    """The six WAND counters, in the kernel's argument order; None each
+    when metrics are off."""
+    names = ("blocks_scored", "blocks_pruned", "segments_scored",
+             "segments_pruned", "pairs_scored", "pairs_pruned")
+    return {n: spark.sparkContext.accumulator(0) if collect_metrics else None
+            for n in names}
+
+
+def _batch_passes(spark, index, qt_rows, k, prune, num_partitions, scorer,
+                  accs, max_queries_per_pass=DEFAULT_MAX_QUERIES_PER_PASS,
+                  seed_thr_by_qid=None, approx_factor=1.0):
+    """batch_query's passes over resolved (non-empty) qt_rows. The pass
+    partition count is resolved once for the whole batch; when it is 1,
+    every pass runs on the driver and the ranked (query_id, rank, doc_id,
+    score) rows come back as a list: no Spark job, no DataFrame.
+    Otherwise the lazy Spark plan of the same rows."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     num_partitions = _pass_partitions(spark, qt_rows, num_partitions)
-
-    accs = tuple(
-        spark.sparkContext.accumulator(0) if collect_metrics else None
-        for _ in range(6)
-    )
-
     all_qids = sorted({r["query_id"] for r in qt_rows})
     on_driver = num_partitions == 1
     parts = []
@@ -883,27 +933,16 @@ def batch_query(
 
     if on_driver:
         # one "task" saw every chunk: each query's candidates are final
-        result = _local_result(spark, _ranked(pd.concat(parts), k))
-    else:
-        cand = reduce(lambda a, b: a.unionByName(b), parts)
-        w_final = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                         F.asc("doc_id"))
-        result = (
-            cand.withColumn("rank", F.row_number().over(w_final))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("int").alias("rank"),
-                    "doc_id", "score")
-        )
-    if collect_metrics:
-        result._flatnav_accumulators = {
-            "blocks_scored": accs[0],
-            "blocks_pruned": accs[1],
-            "segments_scored": accs[2],
-            "segments_pruned": accs[3],
-            "pairs_scored": accs[4],
-            "pairs_pruned": accs[5],
-        }
-    return result
+        return _ranked(pd.concat(parts), k)
+    cand = reduce(lambda a, b: a.unionByName(b), parts)
+    w_final = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                                     F.asc("doc_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w_final))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col("rank").cast("int").alias("rank"),
+                "doc_id", "score")
+    )
 
 
 def _lev_within(a: str, b: str, n: int) -> bool:

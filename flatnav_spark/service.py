@@ -35,7 +35,8 @@ from __future__ import annotations
 from typing import Dict, List, Optional, Tuple
 
 from flatnav_spark.index_io import LoadedIndex
-from flatnav_spark.query import _qt_rows_driver, batch_query, query_one
+from flatnav_spark.query import (_batch_passes, _qt_rows_driver,
+                                 _wand_accumulators, query_one)
 
 
 def _index_stamp(index: LoadedIndex) -> tuple:
@@ -50,7 +51,9 @@ class StandingQueryService:
     ``search_batch`` answers a batch and feeds each answered query's k-th
     score back into the threshold cache; ``search_one`` is the
     single-query latency path. On a preloaded index neither runs a Spark
-    job when its pass sizes to one task (the driver pass in query.py).
+    job when its pass sizes to one task (the driver pass in query.py),
+    and neither builds a DataFrame: both get their ranked rows back as
+    Python tuples.
     ``thr_cache_size`` bounds driver memory: the cache evicts oldest
     entries FIFO past the cap (a threshold is a pure optimization — an
     evicted entry only costs prune efficiency on its next repeat)."""
@@ -66,6 +69,9 @@ class StandingQueryService:
         # TRUE scores is a valid lower bound on the exact k-th score, so
         # a bound cached from an approximate answer never over-prunes an
         # exact run, and vice versa.
+        if approx_factor < 1.0:
+            raise ValueError(
+                f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
         self.spark = spark
         self.index = index
         self.k = k
@@ -113,29 +119,30 @@ class StandingQueryService:
         score)]}. Repeat texts are seeded from the threshold cache; every
         answered query updates it. Results are bit-identical to a cold
         batch_query (the seed is a true lower bound; tested). The pairs go
-        straight to the term resolver, so a one-task batch on a preloaded
-        index runs no Spark job."""
+        straight to the term resolver and the passes run through
+        batch_query's own pass loop (query._batch_passes). A one-task
+        batch on a preloaded index is scored and ranked on the driver,
+        with no Spark job and no DataFrame; a larger one collects the
+        Spark plan."""
         self._check_index()
         seeds = {
             qid: self._thr[text] for qid, text in queries if text in self._thr
         }
-        res = batch_query(
-            self.spark, self.index, None, k=self.k, prune=self.prune,
-            num_partitions=self.num_partitions, scorer=self.scorer,
-            collect_metrics=collect_metrics, seed_thr_by_qid=seeds or None,
-            approx_factor=self.approx_factor,
-            _qt_rows=_qt_rows_driver(self.spark, self.index, queries),
-        )
-        rows = res.collect()
+        qt_rows = _qt_rows_driver(self.spark, self.index, queries)
+        accs = _wand_accumulators(self.spark, collect_metrics)
+        rows = _batch_passes(
+            self.spark, self.index, qt_rows, self.k, self.prune,
+            self.num_partitions, self.scorer, tuple(accs.values()),
+            seed_thr_by_qid=seeds or None, approx_factor=self.approx_factor,
+        ) if qt_rows else []
+        if not isinstance(rows, list):
+            rows = rows.collect()
         if collect_metrics:
-            self.last_metrics = {
-                name: int(a.value)
-                for name, a in res._flatnav_accumulators.items()
-            }
+            self.last_metrics = {n: int(a.value) for n, a in accs.items()}
         out: Dict[int, List[Tuple[int, int, float]]] = {}
-        for r in rows:
-            out.setdefault(int(r.query_id), []).append(
-                (int(r.rank), int(r.doc_id), float(r.score)))
+        for qid, rank, doc_id, score in rows:
+            out.setdefault(int(qid), []).append(
+                (int(rank), int(doc_id), float(score)))
         text_of = dict(queries)
         for qid, hits in out.items():
             hits.sort()

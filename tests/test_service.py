@@ -96,6 +96,34 @@ def test_driver_path_service_matches_spark_pass(spark, zidx):
                            for n, a in res._flatnav_accumulators.items()}
 
 
+def test_driver_path_search_batch_builds_no_dataframe(spark, zidx, monkeypatch):
+    # a one-task batch is ranked on the driver and handed back as rows;
+    # building (and collecting) a result DataFrame is JVM work per batch
+    svc = StandingQueryService(spark, zidx, k=5)
+    expected = _by_qid(batch_query(
+        spark, zidx,
+        spark.createDataFrame(QUERIES, "query_id long, query_text string"),
+        k=5, num_partitions=3))
+
+    def no_dataframe(*a, **kw):
+        raise AssertionError("search_batch built a DataFrame")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_dataframe)
+    assert svc.search_batch(QUERIES) == expected
+    assert svc.search_batch(QUERIES, collect_metrics=True) == expected
+    assert sum(svc.last_metrics.values()) > 0
+    # a batch without one indexed term: no rows, all six counters zero
+    assert svc.search_batch([(0, "zzqqabsent")], collect_metrics=True) == {}
+    assert svc.last_metrics == dict.fromkeys(svc.last_metrics, 0)
+    assert len(svc.last_metrics) == 6
+
+
+def test_service_rejects_approx_factor_below_one(spark, zidx):
+    with pytest.raises(ValueError, match="approx_factor"):
+        StandingQueryService(spark, zidx, k=5, preload_stats=False,
+                             approx_factor=0.5)
+
+
 def test_search_one_seeded_repeat_identical(spark, zidx):
     svc = StandingQueryService(spark, zidx, k=5)
     first = svc.search_one("vaaaaaaa0 import")
