@@ -137,22 +137,10 @@ def main():
         repartition_at_bounds(tf_all, bounds, "term", chunk_of)
         .sortWithinPartitions("term", "doc_id").select(*sel)))
 
-    from pyspark.sql import types as T
-    seg_schema = T.StructType([
-        T.StructField("term", T.StringType(), False),
-        T.StructField("chunk_id", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("block_ids", T.ArrayType(T.LongType()), False),
-        T.StructField("block_counts", T.ArrayType(T.IntegerType()), False),
-        T.StructField("block_max_tf", T.ArrayType(T.LongType()), False),
-        T.StructField("block_min_dl", T.ArrayType(T.LongType()), False),
-        T.StructField("docs_bin", T.BinaryType(), False),
-        T.StructField("tfs_bin", T.BinaryType(), False),
-        T.StructField("dls_bin", T.BinaryType(), False),
-        T.StructField("sum_tf", T.LongType(), False),
-        T.StructField("payload_len", T.LongType(), False),
-        T.StructField("max_dl", T.LongType(), False),
-    ])
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from flatnav_spark.build import SEGMENT_SCHEMA
+    seg_schema = from_arrow_schema(SEGMENT_SCHEMA)
     encode = _make_segment_encoder(block_range, chunk_blocks)
 
     def enc_df():

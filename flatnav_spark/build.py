@@ -47,6 +47,12 @@ merge analog, Index.h:765-834):
   bounded groups (each <= block_range * chunk_blocks docs) instead of one
   straggler task. AQE skew handling stays on as a backstop.
 
+  One writer, ``_write_generation``, runs stage 2 for every caller: build,
+  import_postings and resume pass it every complete group; extend_index
+  passes only the groups not yet committed, as a new generation whose
+  stats are merged into the current ones. ``_commit_generation`` adds the
+  counters it observed to the manifest and commits it.
+
 All heavy lifting is DataFrame ops + Arrow-vectorized mapInPandas; the
 only Python that touches data runs per Arrow batch on numpy arrays.
 """
@@ -61,8 +67,10 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from flatnav_spark.index_io import MANIFEST_VERSION, IndexManifest, LoadedIndex
+from flatnav_spark.index_io import (MANIFEST_VERSION, IndexManifest, LoadedIndex,
+                                    local_path)
 from flatnav_spark.scorer import BM25Params
 from flatnav_spark.tokenizer import make_tfmap_udf
 
@@ -99,6 +107,25 @@ MAX_N_GROUPS = 8
 _UNKNOWN_SIZE = (1 << 63) - 1  # Catalyst's sizeInBytes for "no estimate"
 
 _STAGE1 = "_stage1"
+
+# one postings row per (term, chunk): the segment encoder's output batches
+# and, through from_arrow_schema, the Spark schema every generation is
+# written with. Non-nullable: the encoder sets every field of every row.
+SEGMENT_SCHEMA = pa.schema([pa.field(name, typ, nullable=False) for name, typ in [
+    ("term", pa.string()),
+    ("chunk_id", pa.int64()),
+    ("n", pa.int32()),
+    ("block_ids", pa.list_(pa.int64())),
+    ("block_counts", pa.list_(pa.int32())),
+    ("block_max_tf", pa.list_(pa.int64())),
+    ("block_min_dl", pa.list_(pa.int64())),
+    ("docs_bin", pa.binary()),
+    ("tfs_bin", pa.binary()),
+    ("dls_bin", pa.binary()),
+    ("sum_tf", pa.int64()),
+    ("payload_len", pa.int64()),
+    ("max_dl", pa.int64()),
+]])
 
 
 def _config_hash(mode: str, params: BM25Params, block_range: int, n_splits: int,
@@ -335,28 +362,9 @@ def _make_segment_encoder(block_range: int, chunk_blocks: int):
     restarts at each block sub-run (grouped_gaps), per-run summaries by
     ``np.*.reduceat``. Groups can span Arrow batch boundaries: the
     trailing (term, chunk) group is carried into the next batch."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from flatnav_spark.codec import encode_groups, grouped_gaps
-
-    out_schema = pa.schema(
-        [
-            ("term", pa.string()),
-            ("chunk_id", pa.int64()),
-            ("n", pa.int32()),
-            ("block_ids", pa.list_(pa.int64())),
-            ("block_counts", pa.list_(pa.int32())),
-            ("block_max_tf", pa.list_(pa.int64())),
-            ("block_min_dl", pa.list_(pa.int64())),
-            ("docs_bin", pa.binary()),
-            ("tfs_bin", pa.binary()),
-            ("dls_bin", pa.binary()),
-            ("sum_tf", pa.int64()),
-            ("payload_len", pa.int64()),
-            ("max_dl", pa.int64()),
-        ]
-    )
 
     def encode_run(seg_terms: list, chunks: np.ndarray, doc_ids: np.ndarray,
                    tfs: np.ndarray, dls: np.ndarray, g_starts: np.ndarray,
@@ -422,7 +430,7 @@ def _make_segment_encoder(block_range: int, chunk_blocks: int):
                 pa.array(payload_len),
                 pa.array(seg_max_dl),
             ],
-            schema=out_schema,
+            schema=SEGMENT_SCHEMA,
         )
 
     chunk_span = block_range * chunk_blocks
@@ -525,6 +533,7 @@ def build_index(
     """
     from pyspark.sql import functions as F
 
+    out_path = local_path(out_path)
     spark = corpus_df.sparkSession
     cfg_hash = _config_hash(mode, params, block_range, n_splits, chunk_blocks)
 
@@ -598,39 +607,207 @@ def _auto_out_partitions(spark, n_docs: int) -> int:
     return max(spark.sparkContext.defaultParallelism, 8, n_docs // 8192)
 
 
-def _stats_range_partition(term_stats, bounds, stats_parts: int):
-    """Term-sorted range layout for the stats table WITHOUT a second
-    range-sampling job: subsample the postings shuffle's term boundaries
-    (already proportional to posting mass, which tracks vocabulary mass
-    closely enough for a table this small) down to the stats partition
-    count. Falls back to repartitionByRange when no boundaries exist."""
-    from flatnav_spark.partitioning import fold_to_terms, repartition_at_bounds
-
-    terms = fold_to_terms(bounds, stats_parts)
-    if terms:
-        return repartition_at_bounds(term_stats, terms, "term")
-    return term_stats.repartitionByRange(stats_parts, "term")
-
-
-def _docs_range_partition(docs_all, metas, out_partitions: int):
+def _docs_layout(docs, metas, parts: int, lo: Optional[int]):
     """doc_id-ordered docs layout via the exact zero-job dense-range
-    partitioner: doc ids are dense-ish in [0, max_doc_id] by construction
-    (B3), and every lineage marker records its group's max_doc_id, so the
-    key-space bound costs no job. Falls back to repartitionByRange only
-    for legacy markers lacking max_doc_id."""
+    partitioner over the doc-id window [lo, max marker max_doc_id]: doc
+    ids are dense-ish by construction (B3; an extend generation's ids
+    start at a chunk boundary), and every lineage marker records its group's
+    doc-id range, so the window costs no job. Falls back to
+    repartitionByRange when ``lo`` is None or a marker lacks max_doc_id
+    (legacy markers), or past the token-route cap (plan-size guard)."""
     from flatnav_spark.partitioning import (MAX_TOKEN_ROUTE_PARTS,
                                             repartition_dense_range)
 
-    if out_partitions > MAX_TOKEN_ROUTE_PARTS:  # plan-size guard
-        return docs_all.repartitionByRange(out_partitions, "doc_id")
-    ids = []
-    for _g, meta in metas:
-        if "max_doc_id" not in meta:
-            return docs_all.repartitionByRange(out_partitions, "doc_id")
-        if meta["max_doc_id"] is not None:
-            ids.append(int(meta["max_doc_id"]))
-    hi = max(ids) + 1 if ids else 1
-    return repartition_dense_range(docs_all, "doc_id", hi, out_partitions)
+    if (lo is None or parts > MAX_TOKEN_ROUTE_PARTS
+            or any("max_doc_id" not in meta for meta in metas)):
+        return docs.repartitionByRange(parts, "doc_id")
+    hi = max((meta["max_doc_id"] for meta in metas
+              if meta["max_doc_id"] is not None), default=0) + 1
+    return repartition_dense_range(docs, "doc_id", hi - lo, parts, lo=lo)
+
+
+def _write_generation(spark, out_path: str, m: IndexManifest,
+                      groups: List[Tuple[str, dict]], dirs: Tuple[str, str, str],
+                      out_partitions: Optional[int], docs_divisor: int,
+                      docs_lo: Optional[int], prior_stats, labels) -> dict:
+    """Stage 2 for the stage-1 ``groups`` [(name, marker)]: the term-keyed
+    merge of their postings into chunked block-max segments, their docs
+    in doc_id order, and per-term stats derived from the segments —
+    full-outer-joined into ``prior_stats`` when given — written to the
+    (postings, docs, stats) directory names ``dirs``. Build, import and
+    resume (_stage2) pass every complete group, ``docs_divisor`` 1 and
+    ``docs_lo`` 0; extend_index passes its pending groups, 2, the markers'
+    min_doc_id and the current stats. Returns the counters observed
+    during the writes (no separate collect job); ``labels`` name the
+    three [build-timing] phases."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from flatnav_spark.partitioning import (fold_to_terms, repartition_at_bounds,
+                                            sample_term_chunk_boundaries)
+
+    mark = _phase_timer()
+    p_dir, d_dir, s_dir = (os.path.join(out_path, d) for d in dirs)
+    group_paths = [os.path.join(out_path, _STAGE1, f"group={g}", "docs")
+                   for g, _meta in groups]
+    combined = spark.read.parquet(*group_paths)
+    docs = combined.drop("tfmap")  # parquet never reads the map column
+    # tf stays the stage-1 int32; dl narrows to int32 (a single doc's
+    # token count — int32 by construction: it is a sum of int32 tfs over
+    # one document, and a >2^31-token document would already exceed the
+    # 2 GiB Arrow cell cap upstream). Halves those columns' Arrow width.
+    tf = combined.select(
+        "doc_id", F.col("dl").cast("int").alias("dl"),
+        F.explode("tfmap").alias("term", "tf")
+    )
+    if out_partitions is None:
+        out_partitions = _auto_out_partitions(
+            spark, sum(int(meta.get("n_docs", 0)) for _g, meta in groups))
+    docs_parts = max(out_partitions // docs_divisor, 1)
+    chunk_span = m.block_range * m.chunk_blocks
+
+    def _write_docs():
+        docs_obs = Observation()
+        (
+            _docs_layout(docs, [meta for _g, meta in groups], docs_parts, docs_lo)
+            .sortWithinPartitions("doc_id")
+            .observe(docs_obs,  # above the exchange: see skew_obs note
+                     F.count(F.lit(1)).alias("n_docs"),
+                     F.sum("dl").alias("total_dl"),
+                     F.max("dl").alias("max_dl"))
+            .write.mode("overwrite")
+            .parquet(d_dir)
+        )
+        return docs_obs.get
+
+    # ---- the merge: chunked block-summary posting segments (THE shuffle) ----
+    # range partitioning doubles as the final term-sorted layout (the
+    # gorder/RCM locality analog): one shuffle serves both the encoder's
+    # co-location requirement and the query-time row-group pruning.
+    # Boundaries come from a DRIVER-SIDE sample of stage-1 files
+    # (partitioning.sample_term_chunk_boundaries): repartitionByRange's
+    # sampling job re-executes the whole read+explode child before the
+    # real exchange scans it again — the entire stage-2 input computed
+    # twice (measured ~11 s of the 50 s merge at zipf:200k; guide §2.4).
+    bounds = sample_term_chunk_boundaries(group_paths, out_partitions, chunk_span)
+    # the docs write depends only on the stage-1 read, not on the encode:
+    # submit it from a parallel driver thread so its tasks back-fill
+    # executors under the merge's tail (guide §2.6)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        docs_future = pool.submit(_write_docs)
+
+        chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
+        if bounds is not None:
+            # chunk_id stays an EXPRESSION through the exchange (monotone in
+            # doc_id, so sorting (term, doc_id) IS the (term, chunk_id,
+            # doc_id) order) — 8 B/row less shuffle width
+            part = repartition_at_bounds(tf, bounds, "term", chunk_of)
+        else:  # sample too small to trust (tiny corpus): one sampled pass is cheap
+            part = tf.withColumn("chunk_id", chunk_of).repartitionByRange(
+                out_partitions, "term", "chunk_id").drop("chunk_id")
+        seg_obs = Observation()
+        (
+            part.sortWithinPartitions("term", "doc_id")
+            .select("term", "doc_id", "tf", "dl")
+            .mapInArrow(_make_segment_encoder(m.block_range, m.chunk_blocks),
+                        schema=from_arrow_schema(SEGMENT_SCHEMA))
+            # segment metrics ride the write job (no separate collect pass)
+            .observe(seg_obs,
+                     F.count(F.lit(1)).alias("n_segments"),
+                     F.sum("n").alias("n_postings"),
+                     F.sum("payload_len").alias("payload_bytes"))
+            # zstd: 240 -> 192 MB at zipf:200k with write AND read both faster
+            # (A/B'd; the sandbox taxes every written byte via its page-fault path)
+            .write.mode("overwrite").option("compression", "zstd").parquet(p_dir)
+        )
+        counters = dict(seg_obs.get)
+        mark(labels[0])
+
+        # ---- per-term stats DERIVED from the segments ----
+        # df = sum of per-segment posting counts, cf = sum of per-segment tf
+        # sums: aggregates over the (already merged, much smaller) segment
+        # table instead of a second full shuffle over every posting row.
+        stats = spark.read.parquet(p_dir).groupBy("term").agg(
+            F.sum("n").cast("long").alias("df"),
+            F.sum("sum_tf").cast("long").alias("cf"),
+            # WAND floor statistics: a segment with n >= K proves K docs of
+            # the term exist with dl <= its max_dl, so w * tfn(1, floor_dlK)
+            # lower-bounds the term's k-th-best contribution for k <= K —
+            # the query path's zero-cost parallelism-independent threshold
+            F.min(F.when(F.col("n") >= 10, F.col("max_dl"))).alias("floor_dl10"),
+            F.min(F.when(F.col("n") >= 100, F.col("max_dl"))).alias("floor_dl100"),
+        )
+        if prior_stats is not None:
+            # old stats ⟗ generation stats: O(vocab), no posting-level work
+            # on the existing corpus
+            for c in ("floor_dl10", "floor_dl100"):  # legacy stats: treat as absent
+                if c not in prior_stats.columns:
+                    prior_stats = prior_stats.withColumn(c, F.lit(None).cast("long"))
+            new = stats.select("term", *[F.col(c).alias(f"{c}_new") for c in stats.columns[1:]])
+            stats = prior_stats.join(new, "term", "full_outer").select(
+                "term",
+                *[(F.coalesce(F.col(c), F.lit(0)) + F.coalesce(F.col(f"{c}_new"), F.lit(0)))
+                  .cast("long").alias(c) for c in ("df", "cf")],
+                # least() skips nulls: the floor stays the tightest proven
+                # bound across generations
+                *[F.least(c, f"{c}_new").alias(c) for c in ("floor_dl10", "floor_dl100")],
+            )
+        # stats layout: reuse the postings boundaries' terms (subsampled to
+        # a quarter of the partition count) instead of a range-sampling job,
+        # which would execute the aggregation (or the outer join) twice
+        stats_parts = max(out_partitions // 4, 1)
+        terms = fold_to_terms(bounds, stats_parts)
+        stats = (repartition_at_bounds(stats, terms, "term") if terms
+                 else stats.repartitionByRange(stats_parts, "term"))
+        skew_obs = Observation()
+        (
+            stats.sortWithinPartitions("term")
+            # observe ABOVE the range exchange: repartitionByRange runs a
+            # sampling job over its child, so a CollectMetrics below the
+            # exchange executes twice and double-counts every metric
+            .observe(skew_obs,
+                     F.count(F.lit(1)).alias("n_terms"),
+                     F.max("df").alias("max_df"),
+                     F.avg("df").alias("mean_df"))
+            .write.mode("overwrite")
+            .parquet(s_dir)
+        )
+        counters.update(skew_obs.get)
+        mark(labels[1])
+
+        counters.update(docs_future.result())
+        mark(labels[2])
+    mean_df = float(counters.pop("mean_df") or 0.0)
+    return {**{k: int(v or 0) for k, v in counters.items()}, "mean_df": mean_df}
+
+
+def _commit_generation(out_path: str, m: IndexManifest, dirs: Tuple[str, str, str],
+                       c: dict) -> None:
+    """Add one written generation's counters ``c`` to ``m`` and commit it:
+    build starts from a zeroed manifest, extend from the loaded one. The
+    atomic manifest save is the commit point; references flip here."""
+    p_dir, d_dir, s_dir = dirs
+    m.n_docs += c["n_docs"]
+    m.total_dl += c["total_dl"]
+    m.n_postings += c["n_postings"]
+    m.n_terms = c["n_terms"]
+    for k in ("n_segments", "payload_bytes"):
+        m.metrics[k] = int(m.metrics.get(k, 0)) + c[k]
+    m.metrics["bytes_per_posting"] = (
+        m.metrics["payload_bytes"] / m.n_postings if m.n_postings else 0.0)
+    m.metrics["skew_ratio_max_df_over_mean"] = (
+        c["max_df"] / c["mean_df"] if c["mean_df"] else 0.0)
+    # longest document in the corpus: the query path derives its
+    # zero-cost WAND floor w * tfn(1, max_dl) from it (query.py)
+    m.metrics["max_dl"] = max(int(m.metrics.get("max_dl", 0)), c["max_dl"])
+    m.postings_dirs = list(m.postings_dirs) + [p_dir]
+    m.docs_dirs = list(m.docs_dirs) + [d_dir]
+    m.stats_dir = s_dir
+    m.lineage = {str(g): meta for g, meta in _complete_groups(out_path)}
+    m.save(out_path)
 
 
 def _stage2(spark, out_path, mode, params, block_range, n_splits,
@@ -638,25 +815,20 @@ def _stage2(spark, out_path, mode, params, block_range, n_splits,
     """Term-keyed merge of all stage-1 runs into the final index tables.
     Rerunnable: consumes whatever checkpointed (marker-complete) groups
     exist — including extension groups — and rewrites
-    postings/docs/stats/manifest.
+    postings/docs/stats/manifest through _write_generation.
 
     Crash safety (round-3 ADVICE): when a COMMITTED manifest already
     exists (resume over an extended index, import rebuild), output goes to
     fresh uniquely-named directories and the atomic manifest rewrite flips
     the references — same write-new-dir-then-commit protocol as
-    _append_generation/optimize_index. The old in-place overwrite could
+    extend_index/optimize_index. The old in-place overwrite could
     crash after clobbering postings/ but before the manifest save, leaving
     a manifest that unioned the rebuilt full postings with still-listed
     extend generations (silent double counting). A fresh build (no
     manifest yet) keeps the plain postings/docs/stats names: every crash
     point there leaves no manifest at all."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    mark = _phase_timer()
-    group_paths = _group_docs_paths(out_path)
-    if not group_paths:
+    groups = _complete_groups(out_path)
+    if not groups:
         raise ValueError(f"no complete stage-1 groups under {out_path}")
     try:
         prior = IndexManifest.load(out_path)
@@ -673,204 +845,36 @@ def _stage2(spark, out_path, mode, params, block_range, n_splits,
             f"unreadable ({e}); delete the index directory to rebuild"
         ) from e
     if prior is None:
-        p_dir, d_dir, s_dir, build_gen = "postings", "docs", "stats", 0
+        dirs, build_gen = ("postings", "docs", "stats"), 0
     else:
         build_gen = int(prior.metrics.get("build_gen", 0)) + 1
-        p_dir, d_dir, s_dir = (
-            f"postings_b{build_gen}", f"docs_b{build_gen}", f"stats_b{build_gen}")
+        dirs = (f"postings_b{build_gen}", f"docs_b{build_gen}", f"stats_b{build_gen}")
 
-    combined = spark.read.parquet(*group_paths)
-    docs_all = combined.drop("tfmap")  # parquet never reads the map column
-    # tf stays the stage-1 int32; dl narrows to int32 (a single doc's
-    # token count — int32 by construction: it is a sum of int32 tfs over
-    # one document, and a >2^31-token document would already exceed the
-    # 2 GiB Arrow cell cap upstream). Halves those columns' Arrow width.
-    tf_all = combined.select(
-        "doc_id", F.col("dl").cast("int").alias("dl"),
-        F.explode("tfmap").alias("term", "tf")
-    )
-
-    if out_partitions is None:
-        out_partitions = _auto_out_partitions(
-            spark, sum(int(meta.get("n_docs", 0)) for _g, meta in
-                       _complete_groups(out_path)))
-
-    # ---- stage 2a: chunked block-summary posting segments (THE shuffle) ----
-    seg_schema = T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("chunk_id", T.LongType(), False),
-            T.StructField("n", T.IntegerType(), False),
-            T.StructField("block_ids", T.ArrayType(T.LongType()), False),
-            T.StructField("block_counts", T.ArrayType(T.IntegerType()), False),
-            T.StructField("block_max_tf", T.ArrayType(T.LongType()), False),
-            T.StructField("block_min_dl", T.ArrayType(T.LongType()), False),
-            T.StructField("docs_bin", T.BinaryType(), False),
-            T.StructField("tfs_bin", T.BinaryType(), False),
-            T.StructField("dls_bin", T.BinaryType(), False),
-            T.StructField("sum_tf", T.LongType(), False),
-            T.StructField("payload_len", T.LongType(), False),
-            T.StructField("max_dl", T.LongType(), False),
-        ]
-    )
-    encode = _make_segment_encoder(block_range, chunk_blocks)
-    chunk_span = block_range * chunk_blocks
-    # range partitioning doubles as the final term-sorted layout (the
-    # gorder/RCM locality analog): one shuffle serves both the encoder's
-    # co-location requirement and the query-time row-group pruning.
-    # Boundaries come from a DRIVER-SIDE sample of stage-1 files
-    # (partitioning.sample_term_chunk_boundaries): repartitionByRange's
-    # sampling job re-executes the whole read+explode child before the
-    # real exchange scans it again — the entire stage-2 input computed
-    # twice (measured ~11 s of the 50 s merge at zipf:200k; guide §2.4).
-    from flatnav_spark.partitioning import (
-        repartition_at_bounds, sample_term_chunk_boundaries)
-
-    bounds = sample_term_chunk_boundaries(group_paths, out_partitions, chunk_span)
-    chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
-    if bounds is not None:
-        # chunk_id stays an EXPRESSION through the exchange (monotone in
-        # doc_id, so sorting (term, doc_id) IS the (term, chunk_id,
-        # doc_id) order) — 8 B/row less shuffle width
-        part = repartition_at_bounds(tf_all, bounds, "term", chunk_of)
-    else:  # sample too small to trust (tiny corpus): one sampled pass is cheap
-        part = tf_all.withColumn("chunk_id", chunk_of).repartitionByRange(
-            out_partitions, "term", "chunk_id").drop("chunk_id")
-    seg_obs = Observation()
-    postings = (
-        part.sortWithinPartitions("term", "doc_id")
-        .select("term", "doc_id", "tf", "dl")
-        .mapInArrow(encode, schema=seg_schema)
-        # segment metrics ride the write job (no separate collect pass)
-        .observe(seg_obs,
-                 F.count(F.lit(1)).alias("n_segments"),
-                 F.sum("n").alias("n_postings"),
-                 F.sum("payload_len").alias("payload_bytes"))
-    )
-    # the docs rewrite depends only on the stage-1 read, not on the
-    # encode: submit it from a parallel driver thread so its tasks
-    # back-fill executors under the merge's tail (guide §2.6 — the same
-    # job-level overlap _append_generation already uses)
-    from concurrent.futures import ThreadPoolExecutor
-
-    docs_obs = Observation()
-
-    def _write_docs():
-        (
-            _docs_range_partition(docs_all, _complete_groups(out_path),
-                                  out_partitions)
-            .sortWithinPartitions("doc_id")
-            .observe(docs_obs,  # above the exchange: see skew_obs note
-                     F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("dl").alias("total_dl"),
-                     F.max("dl").alias("max_dl"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, d_dir))
-        )
-        return docs_obs.get
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    docs_future = pool.submit(_write_docs)
-
-    # zstd: 240 -> 192 MB at zipf:200k with write AND read both faster
-    # (A/B'd; the sandbox taxes every written byte via its page-fault path)
-    postings.write.mode("overwrite").option("compression", "zstd").parquet(
-        os.path.join(out_path, p_dir))
-    seg_vals = seg_obs.get
-    seg_df = spark.read.parquet(os.path.join(out_path, p_dir))
-    mark("stage2:merge-encode-write")
-
-    # ---- stage 2b: per-term stats DERIVED from the segments ----
-    # df = sum of per-segment posting counts, cf = sum of per-segment tf
-    # sums: aggregates over the (already merged, much smaller) segment
-    # table instead of a second full shuffle over every posting row.
-    skew_obs = Observation()
-    term_stats = seg_df.groupBy("term").agg(
-        F.sum("n").cast("long").alias("df"),
-        F.sum("sum_tf").cast("long").alias("cf"),
-        # WAND floor statistics: a segment with n >= K proves K docs of
-        # the term exist with dl <= its max_dl, so w * tfn(1, floor_dlK)
-        # lower-bounds the term's k-th-best contribution for k <= K —
-        # the query path's zero-cost parallelism-independent threshold
-        F.min(F.when(F.col("n") >= 10, F.col("max_dl"))).alias("floor_dl10"),
-        F.min(F.when(F.col("n") >= 100, F.col("max_dl"))).alias("floor_dl100"),
-    )
-    # stats layout: reuse the postings boundaries' terms (subsampled to
-    # the smaller partition count) instead of a second range-sampling job
-    # over the segment aggregation
-    stats_parts = max(out_partitions // 4, 1)
-    stats_part = _stats_range_partition(term_stats, bounds, stats_parts)
-    (
-        stats_part.sortWithinPartitions("term")
-        # observe ABOVE the range exchange: repartitionByRange runs a
-        # sampling job over its child, so a CollectMetrics below the
-        # exchange executes twice and double-counts every metric
-        .observe(skew_obs,
-                 F.count(F.lit(1)).alias("n_terms"),
-                 F.max("df").alias("max_df"),
-                 F.avg("df").alias("mean_df"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, s_dir))
-    )
-    skew_vals = skew_obs.get
-    mark("stage2:stats")
-
-    # ---- docs table (submitted above, overlapping the merge) ----
-    docs_vals = docs_future.result()
-    pool.shutdown()
-    mark("stage2:docs-rewrite")
-
-    n_postings = int(seg_vals["n_postings"] or 0)
-    lineage = {str(g): meta for g, meta in _complete_groups(out_path)}
-
-    manifest = IndexManifest(
-        version=MANIFEST_VERSION,
-        tokenizer_mode=mode,
-        k1=params.k1,
-        b=params.b,
-        block_range=block_range,
-        n_splits=n_splits,
-        chunk_blocks=chunk_blocks,
-        n_docs=int(docs_vals["n_docs"] or 0),
-        total_dl=int(docs_vals["total_dl"] or 0),
-        n_terms=int(skew_vals["n_terms"] or 0),
-        n_postings=n_postings,
-        config_hash=cfg_hash,
-        metrics={
-            "n_segments": int(seg_vals["n_segments"] or 0),
-            "payload_bytes": int(seg_vals["payload_bytes"] or 0),
-            "bytes_per_posting": (float(seg_vals["payload_bytes"]) / n_postings) if n_postings else 0.0,
-            "skew_ratio_max_df_over_mean": (
-                float(skew_vals["max_df"]) / float(skew_vals["mean_df"])
-                if skew_vals["mean_df"]
-                else 0.0
-            ),
-            # longest document in the corpus: the query path derives its
-            # zero-cost WAND floor w * tfn(1, max_dl) from it (query.py)
-            "max_dl": int(docs_vals["max_dl"] or 0),
-            "build_gen": build_gen,
-        },
-        lineage=lineage,
-        postings_dirs=[p_dir],
-        docs_dirs=[d_dir],
-        stats_dir=s_dir,
-    )
-    manifest.save(out_path)  # atomic commit: references flip here
+    m = IndexManifest(
+        version=MANIFEST_VERSION, tokenizer_mode=mode, k1=params.k1, b=params.b,
+        block_range=block_range, n_splits=n_splits, chunk_blocks=chunk_blocks,
+        n_docs=0, total_dl=0, n_terms=0, n_postings=0, config_hash=cfg_hash,
+        metrics={"build_gen": build_gen}, postings_dirs=[], docs_dirs=[])
+    counters = _write_generation(
+        spark, out_path, m, groups, dirs, out_partitions, docs_divisor=1,
+        docs_lo=0, prior_stats=None,
+        labels=("stage2:merge-encode-write", "stage2:stats", "stage2:docs-rewrite"))
+    mark = _phase_timer()
+    _commit_generation(out_path, m, dirs, counters)
     # only AFTER the commit: delete every superseded table directory (old
     # build outputs, stale extend generations) — never the three just
     # committed
     import glob as _glob
 
-    keep = {p_dir, d_dir, s_dir}
     for d in (
         _glob.glob(os.path.join(out_path, "postings*"))
         + _glob.glob(os.path.join(out_path, "docs*"))
         + _glob.glob(os.path.join(out_path, "stats*"))
     ):
-        if os.path.basename(d) not in keep:
+        if os.path.basename(d) not in dirs:
             shutil.rmtree(d, ignore_errors=True)
     mark("stage2:metrics-manifest")
-    return LoadedIndex(out_path, manifest)
+    return LoadedIndex(out_path, m)
 
 
 def import_postings(
@@ -898,6 +902,7 @@ def import_postings(
     is first-class: extendable, re-optimizable, stage-2 re-runnable."""
     from pyspark.sql import functions as F
 
+    out_path = local_path(out_path)
     cfg_hash = _config_hash(mode, params, block_range, n_splits, chunk_blocks)
     if os.path.exists(out_path):
         shutil.rmtree(out_path)
@@ -980,9 +985,10 @@ def extend_index(spark, index: LoadedIndex, new_corpus_df,
     New docs get doc_ids continuing each split's ordinal sequence — but
     rounded up to the next CHUNK boundary, so no (term, chunk) pair is
     ever shared between old and new postings. That makes the merge a pure
-    APPEND: the new group's segments become a fresh postings generation
-    directory, docs a fresh docs generation, and term stats an
-    outer-join merge of old stats with the generation's — work is
+    APPEND: _write_generation, the writer build uses too, encodes only the
+    new group's segments into a fresh postings generation directory, its
+    docs into a fresh docs generation, and term stats into an outer-join
+    merge of old stats with the generation's — work is
     O(new docs + vocab), never O(corpus). The manifest (written
     atomically) is the commit point; optimize_index compacts generations.
 
@@ -1075,7 +1081,8 @@ def extend_index(spark, index: LoadedIndex, new_corpus_df,
 
     # merge every checkpointed group the manifest hasn't committed yet —
     # normally just the one written above, plus any from a crashed extend
-    pending = [g for g, _meta in _complete_groups(out_path) if g not in m.lineage]
+    pending = [(g, meta) for g, meta in _complete_groups(out_path)
+               if g not in m.lineage]
     if not pending:
         # idempotent re-add: nothing new on disk — but the caller's handle
         # may still predate an EARLIER extension, so sync it (and drop a
@@ -1084,217 +1091,34 @@ def extend_index(spark, index: LoadedIndex, new_corpus_df,
             caller_manifest.__dict__.update(vars(m))
             caller._stats_cache = None
         return index
-    out = _append_generation(spark, out_path, m, pending, out_partitions)
+
+    # the generation is the unit of work: partition counts are sized to
+    # the NEW docs only (docs at half the merge's), and the docs window
+    # starts at the generation's lowest doc id (markers without
+    # min_doc_id: no window, repartitionByRange)
+    tag = "-".join(g for g, _meta in pending)
+    dirs = (f"postings_{tag}", f"docs_{tag}", f"stats_{tag}")
+    docs_lo = (min((meta["min_doc_id"] for _g, meta in pending
+                    if meta["min_doc_id"] is not None), default=None)
+               if all("min_doc_id" in meta for _g, meta in pending) else None)
+    old_stats_dir = m.stats_dir
+    counters = _write_generation(
+        spark, out_path, m, pending, dirs, out_partitions, docs_divisor=2,
+        docs_lo=docs_lo,
+        prior_stats=spark.read.parquet(os.path.join(out_path, old_stats_dir)),
+        labels=(f"extend:{tag}:encode", f"extend:{tag}:stats-merge",
+                f"extend:{tag}:docs"))
+    mark = _phase_timer()
+    _commit_generation(out_path, m, dirs, counters)
+    if old_stats_dir != dirs[2]:
+        shutil.rmtree(os.path.join(out_path, old_stats_dir), ignore_errors=True)
+    mark(f"extend:{tag}:commit")
     # sync the caller's handle (stats dir was swapped; old one is deleted)
     # AND drop its preloaded term-stats cache: a standing service that
     # extended its index must not keep serving query_one from pre-extend
     # df/floor stats against post-extend n_docs/avgdl (stale-cache scores
     # match neither index, and terms new to the corpus would silently
     # return empty). preload_term_stats re-arms it on demand.
-    caller_manifest.__dict__.update(vars(out.manifest))
+    caller_manifest.__dict__.update(vars(m))
     caller._stats_cache = None
-    return out
-
-
-def _append_generation(spark, out_path: str, m: IndexManifest,
-                       pending: List[str], out_partitions: Optional[int]) -> LoadedIndex:
-    """Encode ONLY the pending stage-1 groups into a new postings/docs
-    generation and outer-join-merge the term stats — the O(new docs)
-    incremental stage 2. Chunk disjointness (extension ids start at a
-    fresh chunk boundary) guarantees no (term, chunk) row exists in two
-    generations. The atomic manifest rewrite commits the generation."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    mark = _phase_timer()
-    tag = "-".join(pending)
-    gen_postings = f"postings_{tag}"
-    gen_docs = f"docs_{tag}"
-    gen_stats = f"stats_{tag}"
-
-    group_paths = [os.path.join(out_path, _STAGE1, f"group={g}", "docs") for g in pending]
-    combined = spark.read.parquet(*group_paths)
-    docs_new = combined.drop("tfmap")
-    tf_new = combined.select(
-        "doc_id", F.col("dl").cast("int").alias("dl"),
-        F.explode("tfmap").alias("term", "tf")
-    )  # int32 tf/dl, chunk_id derived in the encoder — see _stage2
-
-    if out_partitions is None:
-        # sized to the NEW docs only — the generation is the unit of work
-        metas = dict(_complete_groups(out_path))
-        out_partitions = _auto_out_partitions(
-            spark, sum(int(metas.get(g, {}).get("n_docs", 0)) for g in pending))
-
-    seg_schema = T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("chunk_id", T.LongType(), False),
-            T.StructField("n", T.IntegerType(), False),
-            T.StructField("block_ids", T.ArrayType(T.LongType()), False),
-            T.StructField("block_counts", T.ArrayType(T.IntegerType()), False),
-            T.StructField("block_max_tf", T.ArrayType(T.LongType()), False),
-            T.StructField("block_min_dl", T.ArrayType(T.LongType()), False),
-            T.StructField("docs_bin", T.BinaryType(), False),
-            T.StructField("tfs_bin", T.BinaryType(), False),
-            T.StructField("dls_bin", T.BinaryType(), False),
-            T.StructField("sum_tf", T.LongType(), False),
-            T.StructField("payload_len", T.LongType(), False),
-            T.StructField("max_dl", T.LongType(), False),
-        ]
-    )
-    encode = _make_segment_encoder(m.block_range, m.chunk_blocks)
-    chunk_span = m.block_range * m.chunk_blocks
-
-    # every delta/metric rides its write job as an Observation — the extend
-    # fixed floor is 3 writes here + 1 group write, no standalone collects
-    # (round-3 VERDICT #5). The docs write depends only on the stage-1
-    # read, not on the encode, so it's submitted from a parallel driver
-    # thread and overlaps the encode+stats chain (round-4 VERDICT #6:
-    # wall = group + max(encode+stats, docs), not the sum — the same
-    # job-level executeInParallel pattern stage 1 uses).
-    from concurrent.futures import ThreadPoolExecutor
-
-    docs_obs = Observation()
-
-    # zero-job dense-range layout over the generation's [min, max] doc-id
-    # window (from the markers — extend ids are dense-ish above the chunk
-    # boundary); repartitionByRange's sampling job was one of the fixed
-    # jobs in extend's floor. Legacy markers without min_doc_id fall back.
-    metas_by_g = dict(_complete_groups(out_path))
-    gen_metas = [metas_by_g.get(g, {}) for g in pending]
-    lo_ids = [meta.get("min_doc_id") for meta in gen_metas]
-    hi_ids = [meta.get("max_doc_id") for meta in gen_metas]
-    have_window = (all("min_doc_id" in meta for meta in gen_metas)
-                   and any(v is not None for v in lo_ids))
-    docs_parts = max(out_partitions // 2, 1)
-
-    def _docs_layout(df):
-        from flatnav_spark.partitioning import (MAX_TOKEN_ROUTE_PARTS,
-                                                repartition_dense_range)
-
-        if not have_window or docs_parts > MAX_TOKEN_ROUTE_PARTS:
-            return df.repartitionByRange(docs_parts, "doc_id")
-        lo = min(v for v in lo_ids if v is not None)
-        hi = max(v for v in hi_ids if v is not None) + 1
-        return repartition_dense_range(
-            df, "doc_id", hi - lo, docs_parts, lo=lo)
-
-    def _write_docs():
-        (
-            _docs_layout(docs_new)
-            .sortWithinPartitions("doc_id")
-            .observe(docs_obs,  # above the exchange: see _stage2 note
-                     F.count(F.lit(1)).alias("n"),
-                     F.sum("dl").alias("dl"),
-                     F.max("dl").alias("max_dl"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, gen_docs))
-        )
-        return docs_obs.get
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    docs_future = pool.submit(_write_docs)
-
-    # sampled-boundary range partition (see _stage2): repartitionByRange's
-    # sampling job would re-execute the generation's read+explode child —
-    # one of the fixed jobs in extend's floor
-    from flatnav_spark.partitioning import (
-        repartition_at_bounds, sample_term_chunk_boundaries)
-
-    gen_bounds = sample_term_chunk_boundaries(group_paths, out_partitions, chunk_span)
-    gen_chunk_of = F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
-    if gen_bounds is not None:
-        gen_part = repartition_at_bounds(tf_new, gen_bounds, "term", gen_chunk_of)
-    else:
-        gen_part = tf_new.withColumn("chunk_id", gen_chunk_of).repartitionByRange(
-            out_partitions, "term", "chunk_id").drop("chunk_id")
-    seg_obs = Observation()
-    (
-        gen_part.sortWithinPartitions("term", "doc_id")
-        .select("term", "doc_id", "tf", "dl")
-        .mapInArrow(encode, schema=seg_schema)
-        .observe(seg_obs,
-                 F.count(F.lit(1)).alias("n_segments"),
-                 F.sum("n").alias("n_postings"),
-                 F.sum("payload_len").alias("payload_bytes"))
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(os.path.join(out_path, gen_postings))
-    )
-    srow = seg_obs.get
-    seg_df = spark.read.parquet(os.path.join(out_path, gen_postings))
-    mark(f"extend:{tag}:encode")
-
-    # ---- stats merge: old stats ⟗ generation stats (O(vocab), no
-    # posting-level work on the existing corpus) ----
-    new_stats = seg_df.groupBy("term").agg(
-        F.sum("n").cast("long").alias("df_new"),
-        F.sum("sum_tf").cast("long").alias("cf_new"),
-        F.min(F.when(F.col("n") >= 10, F.col("max_dl"))).alias("f10_new"),
-        F.min(F.when(F.col("n") >= 100, F.col("max_dl"))).alias("f100_new"),
-    )
-    old_stats = spark.read.parquet(os.path.join(out_path, m.stats_dir))
-    for c in ("floor_dl10", "floor_dl100"):  # legacy stats: treat as absent
-        if c not in old_stats.columns:
-            old_stats = old_stats.withColumn(c, F.lit(None).cast("long"))
-    skew_obs = Observation()
-    merged = (
-        old_stats.join(new_stats, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("df_new"), F.lit(0)))
-            .cast("long").alias("df"),
-            (F.coalesce(F.col("cf"), F.lit(0)) + F.coalesce(F.col("cf_new"), F.lit(0)))
-            .cast("long").alias("cf"),
-            # least() skips nulls: the floor stays the tightest proven
-            # bound across generations
-            F.least("floor_dl10", "f10_new").alias("floor_dl10"),
-            F.least("floor_dl100", "f100_new").alias("floor_dl100"),
-        )
-    )
-    (
-        # reuse the generation boundaries' terms: the stats-merge child is
-        # a full outer join (old stats scan + new agg) that a range
-        # sampling job would execute twice
-        _stats_range_partition(merged, gen_bounds, max(out_partitions // 4, 1))
-        .sortWithinPartitions("term")
-        .observe(skew_obs,  # above the exchange: see _stage2 note
-                 F.count(F.lit(1)).alias("n_terms"),
-                 F.max("df").alias("max_df"),
-                 F.avg("df").alias("mean_df"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, gen_stats))
-    )
-    skew_row = skew_obs.get
-    mark(f"extend:{tag}:stats-merge")
-
-    drow = docs_future.result()
-    pool.shutdown()
-    mark(f"extend:{tag}:docs")
-
-    old_stats_dir = m.stats_dir
-    m.n_docs += int(drow["n"] or 0)
-    m.total_dl += int(drow["dl"] or 0)
-    m.n_postings += int(srow["n_postings"] or 0)
-    m.n_terms = int(skew_row["n_terms"] or 0)
-    m.metrics["n_segments"] = int(m.metrics.get("n_segments", 0)) + int(srow["n_segments"] or 0)
-    m.metrics["payload_bytes"] = int(m.metrics.get("payload_bytes", 0)) + int(srow["payload_bytes"] or 0)
-    m.metrics["bytes_per_posting"] = (
-        m.metrics["payload_bytes"] / m.n_postings if m.n_postings else 0.0
-    )
-    m.metrics["skew_ratio_max_df_over_mean"] = (
-        float(skew_row["max_df"]) / float(skew_row["mean_df"]) if skew_row["mean_df"] else 0.0
-    )
-    m.metrics["max_dl"] = max(int(m.metrics.get("max_dl", 0)),
-                              int(drow["max_dl"] or 0))
-    m.postings_dirs = list(m.postings_dirs) + [gen_postings]
-    m.docs_dirs = list(m.docs_dirs) + [gen_docs]
-    m.stats_dir = gen_stats
-    m.lineage = {str(g): meta for g, meta in _complete_groups(out_path)}
-    m.save(out_path)  # atomic commit point
-    if old_stats_dir != gen_stats:
-        shutil.rmtree(os.path.join(out_path, old_stats_dir), ignore_errors=True)
-    mark(f"extend:{tag}:commit")
-    return LoadedIndex(out_path, m)
+    return index

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import asdict, dataclass, field, fields
 
 from flatnav_spark.scorer import BM25Params
@@ -178,5 +179,26 @@ class LoadedIndex:
         }
 
 
+def local_path(path: str) -> str:
+    """The local filesystem path an index location names: a ``file:``
+    URI (``file:///x``, ``file:/x``, ``file://localhost/x``) resolves to
+    its path, a plain path passes through. Every other scheme raises
+    ValueError before anything is written: the engine's own reads and
+    writes (markers, manifest, sampling) go through the local filesystem
+    while Spark would resolve the scheme itself, so the two would split
+    one index across two places."""
+    from urllib.parse import unquote, urlparse
+
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        url = urlparse(path)
+        if url.scheme != "file" or url.netloc not in ("", "localhost"):
+            raise ValueError(
+                f"unsupported index location {path!r}: only local paths and "
+                "file: URIs are supported")
+        return unquote(url.path)
+    return path
+
+
 def load_index(path: str) -> LoadedIndex:
+    path = local_path(path)
     return LoadedIndex(path, IndexManifest.load(path))

@@ -457,25 +457,14 @@ def _make_partition_scorer(
 
 def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
     """One column-pruned, row-group-pruned read of the stats table
-    restricted to ``terms`` (sorted): literal IN below LARGE_TERM_SET,
-    broadcast semi-join + [min, max] range above — the same shape as
-    _filter_postings_to_terms."""
-    from pyspark.sql import functions as F
-
+    restricted to ``terms`` (sorted), filtered by _filter_to_terms."""
     stats = index.term_stats(spark)
     cols = ["term", "df"] + [
         c for c in ("floor_dl10", "floor_dl100") if c in stats.columns
     ]
     if not terms:
         return []
-    if len(terms) <= LARGE_TERM_SET:
-        flt = stats.filter(F.col("term").isin(terms))
-    else:
-        tdf = spark.createDataFrame(((t,) for t in terms), "term string")
-        flt = stats.filter(
-            (F.col("term") >= terms[0]) & (F.col("term") <= terms[-1])
-        ).join(F.broadcast(tdf), "term", "left_semi")
-    return flt.select(*cols).collect()
+    return _filter_to_terms(spark, stats, terms).select(*cols).collect()
 
 
 def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
@@ -625,8 +614,17 @@ def _pass_partitions(spark, qt_rows, num_partitions: Optional[int]) -> int:
     return max(1, min(cap, -(-est // TARGET_POSTINGS_PER_TASK)))
 
 
-def _filter_postings_to_terms(spark, postings, terms: List[str]):
-    """Restrict the postings scan to the query batch's terms.
+def _check_approx_factor(approx_factor: float) -> None:
+    """The one check of the WAND threshold factor theta (>= 1.0, 1.0 =
+    exact) for batch_query, query_one and StandingQueryService."""
+    if approx_factor < 1.0:
+        raise ValueError(
+            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
+
+
+def _filter_to_terms(spark, table, terms: List[str]):
+    """Restrict a term-sorted table's scan (postings, stats) to the query
+    batch's terms.
 
     Small sets use a literal IN — pushed to parquet, row-group pruning on
     the term-sorted layout. Large sets (a 4096-query pass can carry 10^4+
@@ -639,10 +637,10 @@ def _filter_postings_to_terms(spark, postings, terms: List[str]):
     from pyspark.sql import functions as F
 
     if len(terms) <= LARGE_TERM_SET:
-        return postings.filter(F.col("term").isin(terms))
+        return table.filter(F.col("term").isin(terms))
     tdf = spark.createDataFrame(((t,) for t in terms), "term string")
     return (
-        postings.filter((F.col("term") >= terms[0]) & (F.col("term") <= terms[-1]))
+        table.filter((F.col("term") >= terms[0]) & (F.col("term") <= terms[-1]))
         .join(F.broadcast(tdf), "term", "left_semi")
     )
 
@@ -718,7 +716,7 @@ def _run_pass(spark, index, qt_rows, k, prune, num_partitions, scorer_name,
     plan, part_scorer, cols = _pass_prologue(
         index, qt_rows, k, prune, scorer_name, accs, seed_thr_by_qid,
         approx_factor)
-    postings = _filter_postings_to_terms(spark, index.postings(spark), plan.terms)
+    postings = _filter_to_terms(spark, index.postings(spark), plan.terms)
     # Contiguous RANGE partitioning, not hash: with n_chunks within a
     # small factor of the task count, hash collisions leave some tasks
     # with 2-4x the chunks of others. repartitionByRange would balance
@@ -868,9 +866,7 @@ def batch_query(
     bench/approx_bench.py.
     """
     get_scorer(scorer)  # validate early
-    if approx_factor < 1.0:
-        raise ValueError(
-            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
+    _check_approx_factor(approx_factor)
     # driver-side query-term table: bounded by the query batch
     # (|queries| x |terms per query|), never by corpus size; zero-job
     # with preloaded stats (_resolve_query_terms). _qt_rows is the
@@ -1161,9 +1157,7 @@ def query_one(spark, index: LoadedIndex, query_text: str, k: int = 10,
     doc_id asc) order, so results are bit-identical to it (tested). The
     latency harness in bench.py times repeated calls of this."""
     get_scorer(scorer)
-    if approx_factor < 1.0:
-        raise ValueError(
-            f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
+    _check_approx_factor(approx_factor)
     qt_rows = _qt_rows_driver(spark, index, [(0, query_text)])
     if not qt_rows:
         return []

@@ -35,8 +35,8 @@ from __future__ import annotations
 from typing import Dict, List, Optional, Tuple
 
 from flatnav_spark.index_io import LoadedIndex
-from flatnav_spark.query import (_batch_passes, _qt_rows_driver,
-                                 _wand_accumulators, query_one)
+from flatnav_spark.query import (_batch_passes, _check_approx_factor,
+                                 _qt_rows_driver, _wand_accumulators, query_one)
 
 
 def _index_stamp(index: LoadedIndex) -> tuple:
@@ -69,9 +69,7 @@ class StandingQueryService:
         # TRUE scores is a valid lower bound on the exact k-th score, so
         # a bound cached from an approximate answer never over-prunes an
         # exact run, and vice versa.
-        if approx_factor < 1.0:
-            raise ValueError(
-                f"approx_factor must be >= 1.0 (1.0 = exact), got {approx_factor}")
+        _check_approx_factor(approx_factor)
         self.spark = spark
         self.index = index
         self.k = k

@@ -1,6 +1,8 @@
 """Edge-case corpora (FIXTURES.md §4): tiny inline fixtures through the
 full build+query path, each checked rank-identically against the oracle."""
 
+import os
+
 import pytest
 
 from flatnav_spark.build import build_index
@@ -140,3 +142,45 @@ def test_corpus_from_table_catalog_path(spark):
     base.drop("content").createOrReplaceTempView("bad_tbl")
     with _pytest.raises(ValueError, match="missing corpus columns"):
         corpus_from_table(spark, "bad_tbl")
+
+
+def _topk(spark, index, queries, k=5):
+    qdf = spark.createDataFrame(queries, "query_id long, query_text string")
+    return sorted((r.query_id, r.rank, r.doc_id, r.score)
+                  for r in batch_query(spark, index, qdf, k=k).collect())
+
+
+def test_file_uri_index_path(spark, tmp_path):
+    """A file: URI names the local directory it points at: an index built
+    and loaded at file://<dir> lands in <dir> and ranks exactly like the
+    same corpus's index at a plain path."""
+    from flatnav_spark.corpus import synth_corpus, synth_queries
+    from flatnav_spark.index_io import load_index
+
+    corpus = spark.createDataFrame(synth_corpus(60, seed=9), SCHEMA)
+    kw = dict(mode="code", n_splits=4, n_groups=2, block_range=16, out_partitions=2)
+    plain = build_index(corpus, str(tmp_path / "plain"), **kw)
+    uri = (tmp_path / "uri").as_uri()
+    assert uri.startswith("file:///")
+    build_index(corpus, uri, **kw)
+    assert os.path.exists(tmp_path / "uri" / "manifest.json")
+    queries = synth_queries(10)
+    assert _topk(spark, load_index(uri), queries) == _topk(spark, plain, queries)
+
+
+def test_non_local_index_uri_rejected(spark, tmp_path, monkeypatch):
+    """Any scheme but file: is refused before anything is written — no
+    stage-1 job, and no literal 's3a:' directory in the working dir."""
+    from flatnav_spark.build import import_postings
+    from flatnav_spark.index_io import load_index
+
+    monkeypatch.chdir(tmp_path)
+    corpus = spark.createDataFrame([_row(0, "alpha beta")], SCHEMA)
+    flat = spark.createDataFrame([("alpha", 0, 1)], "term string, doc_id long, tf int")
+    with pytest.raises(ValueError, match="unsupported index location"):
+        build_index(corpus, "s3a://bucket/x")
+    with pytest.raises(ValueError, match="unsupported index location"):
+        import_postings(spark, flat, "s3a://bucket/x")
+    with pytest.raises(ValueError, match="unsupported index location"):
+        load_index("s3a://bucket/x")
+    assert os.listdir(tmp_path) == []

@@ -278,7 +278,7 @@ def test_large_term_set_semi_join_path(spark, built, monkeypatch):
 
     # plan shape: broadcast semi-join, range predicate pushed to parquet
     terms = sorted({t for _q, text in queries for t in text.split()})
-    filtered = Q._filter_postings_to_terms(spark, index.postings(spark), terms)
+    filtered = Q._filter_to_terms(spark, index.postings(spark), terms)
     plan = filtered._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
     assert "GreaterThanOrEqual(term" in plan and "LessThanOrEqual(term" in plan

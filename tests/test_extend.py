@@ -244,3 +244,27 @@ def test_rebuild_refuses_unreadable_manifest(spark, tmp_path):
                     resume=True)
     # the existing tables were left untouched
     assert os.path.isdir(os.path.join(out, "postings"))
+
+
+def test_extend_keeps_the_books_of_a_fresh_build(spark, tmp_path):
+    """Build and extend commit through one bookkeeping path: an extended
+    index's manifest counters equal those of a fresh build over the union
+    corpus, and validate_index passes on it before any optimize."""
+    from flatnav_spark.maintenance import validate_index
+
+    rows = synth_corpus(100, seed=5)
+    kw = dict(mode="code", n_splits=8, n_groups=2, block_range=64, out_partitions=4)
+    index = build_index(spark.createDataFrame(rows[:70], SCHEMA),
+                        str(tmp_path / "ext"), **kw)
+    ext = extend_index(spark, index, spark.createDataFrame(rows[70:], SCHEMA),
+                       out_partitions=4)
+    assert len(ext.manifest.postings_dirs) == 2
+    validate_index(spark, ext)
+    fresh = build_index(spark.createDataFrame(rows, SCHEMA),
+                        str(tmp_path / "fresh"), **kw)
+
+    def books(m):
+        return (m.n_docs, m.total_dl, m.n_postings, m.n_terms,
+                m.metrics["max_dl"], m.metrics["skew_ratio_max_df_over_mean"])
+
+    assert books(ext.manifest) == books(fresh.manifest)
