@@ -66,7 +66,6 @@ import shutil
 from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from flatnav_spark.index_io import (MANIFEST_VERSION, IndexManifest, LoadedIndex,

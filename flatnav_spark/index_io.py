@@ -129,24 +129,8 @@ class LoadedIndex:
         # materializing 10^5-10^6 Row objects driver-side was the slow
         # part of arming the cache (r6; guide §6 Arrow-for-driver-transfers)
         stats = self.term_stats(spark)
-        has_floor = "floor_dl10" in stats.columns
-        cols = ["term", "df"] + (
-            ["floor_dl10", "floor_dl100"] if has_floor else [])
-        pdf = stats.select(*cols).toPandas()
-        terms = pdf["term"].tolist()
-        dfs = pdf["df"].tolist()
-        if has_floor:
-            import pandas as pd
-
-            # nullable int columns arrive as float NaN; keep ints-or-None
-            f10 = [None if pd.isna(v) else int(v) for v in pdf["floor_dl10"].tolist()]
-            f100 = [None if pd.isna(v) else int(v) for v in pdf["floor_dl100"].tolist()]
-        else:
-            f10 = f100 = [None] * len(terms)
-        self._stats_cache = {
-            t: {"df": int(d), "floor_dl10": a, "floor_dl100": b}
-            for t, d, a, b in zip(terms, dfs, f10, f100)
-        }
+        self._stats_cache = stats_dict(
+            stats.select(*stats_columns(stats)).toPandas())
         return len(self._stats_cache)
 
     def docs(self, spark):
@@ -177,6 +161,32 @@ class LoadedIndex:
             "bm25": {"k1": m.k1, "b": m.b},
             "metrics": m.metrics,
         }
+
+
+def stats_columns(stats) -> list:
+    """The columns of a term-stats DataFrame a query reads: term, df and
+    the two WAND floor columns where the table has them."""
+    return ["term", "df"] + [
+        c for c in ("floor_dl10", "floor_dl100") if c in stats.columns]
+
+
+def stats_dict(pdf) -> dict:
+    """{term: {"df", "floor_dl10", "floor_dl100"}} from a pandas frame of
+    stats_columns: the one row shape every query front end resolves its
+    terms to. An absent or null floor is None (nullable int columns
+    arrive as float NaN)."""
+    import pandas as pd
+
+    def floors(c):
+        if c not in pdf.columns:
+            return [None] * len(pdf)
+        return [None if pd.isna(v) else int(v) for v in pdf[c].tolist()]
+
+    return {
+        t: {"df": int(d), "floor_dl10": a, "floor_dl100": b}
+        for t, d, a, b in zip(pdf["term"].tolist(), pdf["df"].tolist(),
+                              floors("floor_dl10"), floors("floor_dl100"))
+    }
 
 
 def local_path(path: str) -> str:

@@ -9,7 +9,7 @@ silently shipping an unlabeled float.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Dict, Optional
+from typing import Dict, Optional
 
 
 @dataclass(frozen=True)

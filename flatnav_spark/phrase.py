@@ -45,6 +45,7 @@ from typing import List, Tuple
 import pandas as pd
 
 from flatnav_spark.index_io import LoadedIndex
+from flatnav_spark.query import _term_stats
 from flatnav_spark.tokenizer import get_pos_tokenizer
 
 # data-sized output files, same policy as the postings merge (build.py)
@@ -275,24 +276,13 @@ def phrase_query_batch(spark, index: LoadedIndex, queries_df, k: int = 10,
     # terms' (large) position rows only for docs that contain the
     # query's min-df term — without this, one stop-word-grade term drags
     # its positions for EVERY doc through the shuffle. df comes from the
-    # index's term stats (preloaded cache when standing, else one tiny
-    # filtered read); an unindexed term has df 0 = rarest, correctly
-    # emptying the candidate set.
+    # index's term stats (query._term_stats: the preloaded cache when
+    # something armed it, else one tiny filtered read); an unindexed term
+    # has df 0 = rarest, correctly emptying the candidate set.
     needed = sorted({t for _, t, _ in pair_rows})
     df_of = dict.fromkeys(needed, 0)
-    if index._stats_cache is not None:
-        for t in needed:
-            st = index._stats_cache.get(t)
-            if st is not None:
-                df_of[t] = int(st["df"])
-    else:
-        stats = (
-            index.term_stats(spark)
-            .filter(F.col("term").isin(needed))
-            .select("term", "df").collect()
-        )
-        for r in stats:
-            df_of[r["term"]] = int(r["df"])
+    for t, st in _term_stats(spark, index, needed).items():
+        df_of[t] = st["df"]
     rarest_of = {}
     for qid, t, _ in pair_rows:
         cur = rarest_of.get(qid)

@@ -9,11 +9,12 @@ Plan shape — ONE shuffle on the hot path, no join:
   1. resolve query terms on the driver (_resolve_query_terms): collect
      the query texts (one job if the frame was built from a Python list),
      tokenize them with the index's tokenizer (the same pure function the
-     build's UDF wraps), and look up df from the
-     preloaded stats cache or one filtered stats read — the query-term
-     table is tiny (bounded by the query batch) and is closure-broadcast
-     to every task, the analog of flatnav's shared read-only index +
-     per-thread queries.
+     build's UDF wraps), and look up each term's df and WAND floors with
+     _term_stats — dict lookups in the preloaded stats cache, else one
+     filtered stats read, both giving index_io.stats_dict rows. The
+     query-term table is tiny (bounded by the query batch) and is
+     closure-broadcast to every task, the analog of flatnav's shared
+     read-only index + per-thread queries.
   2. postings scan filtered to the batch's terms — literal ``term IN``
      for small sets, broadcast LEFT SEMI join + [min,max] range predicate
      above LARGE_TERM_SET (row-group pruning on the term-sorted layout
@@ -77,9 +78,10 @@ import numpy as np
 import pandas as pd
 
 from flatnav_spark.codec import varint_decode
-from flatnav_spark.index_io import LoadedIndex
+from flatnav_spark.index_io import LoadedIndex, stats_columns, stats_dict
 from flatnav_spark.partitioning import repartition_dense_range
 from flatnav_spark.scorer import get_scorer
+from flatnav_spark.tokenizer import get_tokenizer
 
 # multiplicative + absolute inflation of upper bounds: guards against
 # summation-order float drift between the metadata-side bound and the
@@ -173,12 +175,7 @@ def _make_partition_scorer(
     chunk_blocks: int,
     k: int,
     prune: bool,
-    acc_blocks_scored=None,
-    acc_blocks_pruned=None,
-    acc_segments_scored=None,
-    acc_segments_pruned=None,
-    acc_pairs_scored=None,
-    acc_pairs_pruned=None,
+    accs: Tuple,
     seed_thr: Optional[np.ndarray] = None,
     approx_factor: float = 1.0,
 ):
@@ -201,7 +198,8 @@ def _make_partition_scorer(
 
     WAND is counted at three grains (the M4 distance-computations analog):
     whole blocks, sub-runs ("segments" — the old (term, block) decode
-    unit), and (query, block) pairs.
+    unit), and (query, block) pairs. ``accs`` holds one accumulator (or
+    None) per counter, in _wand_accumulators' order.
 
     ``seed_thr`` (round-3 VERDICT #6) pre-loads each query's threshold
     with a GLOBAL lower bound on its final k-th score (the analytic floor,
@@ -415,18 +413,10 @@ def _make_partition_scorer(
         if carry is not None and not carry.empty:
             do_chunk(carry)
 
-        if acc_blocks_scored is not None:
-            acc_blocks_scored.add(n_scored)
-        if acc_blocks_pruned is not None:
-            acc_blocks_pruned.add(n_pruned)
-        if acc_segments_scored is not None:
-            acc_segments_scored.add(n_seg_scored)
-        if acc_segments_pruned is not None:
-            acc_segments_pruned.add(n_seg_pruned)
-        if acc_pairs_scored is not None:
-            acc_pairs_scored.add(n_qb_scored)
-        if acc_pairs_pruned is not None:
-            acc_pairs_pruned.add(n_qb_pruned)
+        for acc, n in zip(accs, (n_scored, n_pruned, n_seg_scored,
+                                 n_seg_pruned, n_qb_scored, n_qb_pruned)):
+            if acc is not None:
+                acc.add(n)
 
         out_q, out_d, out_s = [], [], []
         for q_idx in range(n_q):
@@ -455,23 +445,28 @@ def _make_partition_scorer(
     return score_partition
 
 
-def _stats_rows_for_terms(spark, index: LoadedIndex, terms: List[str]):
-    """One column-pruned, row-group-pruned read of the stats table
-    restricted to ``terms`` (sorted), filtered by _filter_to_terms."""
-    stats = index.term_stats(spark)
-    cols = ["term", "df"] + [
-        c for c in ("floor_dl10", "floor_dl100") if c in stats.columns
-    ]
+def _term_stats(spark, index: LoadedIndex, terms) -> Dict[str, dict]:
+    """{term: stats_dict row} for the indexed ones of ``terms`` (distinct):
+    dict lookups when the preloaded cache is armed, else ONE column-pruned,
+    row-group-pruned read of the stats table restricted to the terms
+    (_filter_to_terms). The one place a query front end's term stats come
+    from; arming the cache is the caller's decision."""
+    cache = index._stats_cache
+    if cache is not None:
+        return {t: cache[t] for t in terms if t in cache}
     if not terms:
-        return []
-    return _filter_to_terms(spark, stats, terms).select(*cols).collect()
+        return {}
+    stats = index.term_stats(spark)
+    return stats_dict(_filter_to_terms(spark, stats, sorted(terms))
+                      .select(*stats_columns(stats)).toPandas())
 
 
 def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
     """qt_rows for a query batch, resolved DRIVER-SIDE: the tokenizer is
-    a pure function (tokenizer.py), so query texts collect, tokenize on
-    the driver, and their stats come from either the preloaded cache
-    (standing services — zero jobs) or ONE narrow filtered read of the
+    a pure function (tokenizer.py), so query texts collect and go to
+    _qt_rows_driver, which tokenizes them and takes their stats from
+    _term_stats — the preloaded cache (zero jobs; armed on first use
+    below AUTO_PRELOAD_MAX_TERMS) or ONE narrow filtered read of the
     term-stats table. The collect is job-free only for a LocalRelation
     (built from pyarrow, or pandas with Arrow on): a list-built frame is
     a LogicalRDD whose collect is one job (1.9 s of process-tree CPU for
@@ -493,49 +488,26 @@ def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
 AUTO_PRELOAD_MAX_TERMS = 2_000_000
 
 
-def _qt_rows_driver(spark, index: LoadedIndex, pairs):
-    """Driver-side qt_rows for [(query_id, query_text)] pairs — cache hit
-    is zero jobs, cache miss is one filtered stats read (or, below
-    AUTO_PRELOAD_MAX_TERMS, a one-time full preload amortized across
-    every later batch on this handle)."""
+def _qt_rows_driver(spark, index: LoadedIndex, pairs) -> List[dict]:
+    """Driver-side qt_rows for [(query_id, query_text)] pairs: one row
+    {query_id, term, df, floor_dl10, floor_dl100} per distinct indexed
+    term of each pair, in pair order (a repeated query_id contributes
+    every pair's terms). Below AUTO_PRELOAD_MAX_TERMS the first call arms
+    the stats cache (a one-time full preload amortized across every later
+    call on this handle), so later calls run no job; above it each call
+    is one filtered stats read (_term_stats). The single implementation
+    behind batch_query, query_one and StandingQueryService.search_batch,
+    so they stay bit-identical by construction."""
     if index._stats_cache is None and index.manifest.n_terms <= AUTO_PRELOAD_MAX_TERMS:
         index.preload_term_stats(spark)
-    if index._stats_cache is not None:
-        return _qt_rows_from_cache(index, pairs)
-    from flatnav_spark.tokenizer import get_tokenizer
-
     tok = get_tokenizer(index.manifest.tokenizer_mode)
-    terms_of = {
-        int(qid): sorted(set(tok(text)) if isinstance(text, str) else set())
-        for qid, text in pairs
-    }
-    all_terms = sorted(set().union(*terms_of.values())) if terms_of else []
-    rows = _stats_rows_for_terms(spark, index, all_terms)
-    stats_of = {r["term"]: r for r in rows}
-    cols = [c for c in ("df", "floor_dl10", "floor_dl100")
-            if rows and c in rows[0].__fields__]
+    terms_of = [(int(qid), sorted(set(tok(text)))) for qid, text in pairs]
+    stats_of = _term_stats(spark, index, set().union(*(ts for _, ts in terms_of)))
     return [
-        {"query_id": qid, "term": t, **{c: stats_of[t][c] for c in cols}}
-        for qid, ts in terms_of.items()
+        {"query_id": qid, "term": t, **stats_of[t]}
+        for qid, ts in terms_of
         for t in ts
         if t in stats_of
-    ]
-
-
-def _qt_rows_from_cache(index: LoadedIndex, pairs) -> List[dict]:
-    """Driver-side qt_rows from the preloaded stats cache for [(query_id,
-    query_text)] pairs — the single implementation behind both the
-    batched and the single-query (query_one) fast paths, so the two stay
-    bit-identical by construction."""
-    from flatnav_spark.tokenizer import get_tokenizer
-
-    cache = index._stats_cache
-    tok = get_tokenizer(index.manifest.tokenizer_mode)
-    return [
-        {"query_id": int(qid), "term": t, **cache[t]}
-        for qid, text in pairs
-        for t in sorted(set(tok(text)))
-        if t in cache
     ]
 
 
@@ -557,12 +529,8 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
     N8 for +0.00 seg prune frac); threshold REUSE across batches
     (seed_thr_by_qid) is the scale path for standing query services."""
     max_dl = int(m.metrics.get("max_dl", 0) or 0)
-    if not qt_rows:
-        return {}
-    r0 = qt_rows[0]
-    fields = set(r0.__fields__) if hasattr(r0, "__fields__") else set(r0.keys())
-    use10 = k <= 10 and "floor_dl10" in fields
-    use100 = k <= 100 and "floor_dl100" in fields
+    use10 = k <= 10
+    use100 = k <= 100
 
     def tfn1(dl: int) -> float:
         return float(scorer.tfn(np.array([1]), np.array([dl]),
@@ -692,7 +660,7 @@ def _pass_prologue(index, qt_rows, k, prune, scorer_name, accs,
             seed_thr = f_arr if seed_thr is None else np.maximum(seed_thr, f_arr)
     part_scorer = _make_partition_scorer(
         plan, np.array(qids, dtype=np.int64), m.avgdl, m.params, scorer_name,
-        m.block_range, m.chunk_blocks, k, prune, *accs, seed_thr=seed_thr,
+        m.block_range, m.chunk_blocks, k, prune, accs, seed_thr=seed_thr,
         approx_factor=approx_factor,
     )
     # Project to the columns the kernel actually reads (guide §4: Spark
@@ -1020,8 +988,6 @@ def expand_query_patterns(spark, index: LoadedIndex, pairs,
     vocab); default None = exact semantics, matching the SQL oracle."""
     from pyspark.sql import functions as F
 
-    from flatnav_spark.tokenizer import get_tokenizer
-
     tok = get_tokenizer(index.manifest.tokenizer_mode)
     plain_of: Dict[int, set] = {}
     prefixes_of: Dict[int, set] = {}
@@ -1062,25 +1028,10 @@ def expand_query_patterns(spark, index: LoadedIndex, pairs,
         all_prefixes |= pats
         all_fuzzies |= fuzz
 
-    cache = index._stats_cache
-    if cache is not None:
-        match_of = {
-            p: sorted(t for t in cache if t.startswith(p))
-            for p in all_prefixes
-        }
-        fmatch_of = _fuzzy_matches(cache, all_fuzzies)
-        stats_of = {t: cache[t] for ts in match_of.values() for t in ts}
-        stats_of.update({t: cache[t] for ts in fmatch_of.values() for t in ts})
-        for qid, plain in plain_of.items():
-            for t in plain:
-                if t in cache:
-                    stats_of[t] = cache[t]
-    else:
-        stats = index.term_stats(spark)
-        cond = None
-        all_plain = sorted(set().union(*plain_of.values()) if plain_of else set())
-        if all_plain:
-            cond = F.col("term").isin(all_plain)
+    vocab = index._stats_cache
+    if vocab is None:
+        all_plain = sorted(set().union(*plain_of.values()))
+        cond = F.col("term").isin(all_plain) if all_plain else None
         for p in sorted(all_prefixes):
             c = F.col("term").startswith(p)
             cond = c if cond is None else (cond | c)
@@ -1089,35 +1040,29 @@ def expand_query_patterns(spark, index: LoadedIndex, pairs,
             cond = c if cond is None else (cond | c)
         if cond is None:
             return []
-        cols = ["term", "df"] + [
-            c for c in ("floor_dl10", "floor_dl100") if c in stats.columns]
-        rows = stats.filter(cond).select(*cols).collect()
-        stats_of = {
-            r["term"]: {k: r[k] for k in cols if k != "term"} for r in rows}
-        match_of = {
-            p: sorted(t for t in stats_of if t.startswith(p))
-            for p in all_prefixes
-        }
-        fmatch_of = {
-            (b, d): sorted(t for t in stats_of if _lev_within(b, t, d))
-            for b, d in all_fuzzies
-        }
+        stats = index.term_stats(spark)
+        vocab = stats_dict(
+            stats.filter(cond).select(*stats_columns(stats)).toPandas())
+    match_of = {
+        p: sorted(t for t in vocab if t.startswith(p)) for p in all_prefixes
+    }
+    fmatch_of = _fuzzy_matches(vocab, all_fuzzies)
 
     qt_rows = []
     for qid in plain_of:
-        terms = {t for t in plain_of[qid] if t in stats_of}
+        terms = {t for t in plain_of[qid] if t in vocab}
         for p in prefixes_of[qid]:
             m = match_of[p]
             if max_expansions is not None and len(m) > max_expansions:
-                m = sorted(m, key=lambda t: (-stats_of[t]["df"], t))[:max_expansions]
+                m = sorted(m, key=lambda t: (-vocab[t]["df"], t))[:max_expansions]
             terms |= set(m)
         for bd in fuzzies_of[qid]:
             m = fmatch_of[bd]
             if max_expansions is not None and len(m) > max_expansions:
-                m = sorted(m, key=lambda t: (-stats_of[t]["df"], t))[:max_expansions]
+                m = sorted(m, key=lambda t: (-vocab[t]["df"], t))[:max_expansions]
             terms |= set(m)
         for t in sorted(terms):
-            qt_rows.append({"query_id": qid, "term": t, **stats_of[t]})
+            qt_rows.append({"query_id": qid, "term": t, **vocab[t]})
     return qt_rows
 
 

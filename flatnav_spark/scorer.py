@@ -49,18 +49,6 @@ def tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float, params: BM25Params) ->
     return tf64 * (params.k1 + 1.0) / denom
 
 
-def term_scores(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    df: int,
-    n_docs: int,
-    avgdl: float,
-    params: BM25Params,
-) -> np.ndarray:
-    """Per-posting BM25 contribution of one term: idf(df) * tfn(tf, dl)."""
-    return float(idf(np.array([df]), n_docs)[0]) * tf_norm(tf, dl, avgdl, params)
-
-
 def block_max_tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, params: BM25Params) -> float:
     """Upper bound of tfn over a posting block (WAND block-max summary).
 

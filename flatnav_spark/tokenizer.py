@@ -21,7 +21,7 @@ an Arrow-vectorized pandas UDF — never a per-row Python UDF.
 from __future__ import annotations
 
 import re
-from typing import Iterable, List
+from typing import List
 
 import pandas as pd
 
@@ -191,23 +191,6 @@ def tokenize_series(contents: pd.Series, mode: str = "code") -> pd.Series:
     """Vectorized (per-Arrow-batch) tokenization of a pandas Series of str."""
     fn = get_tokenizer(mode)
     return contents.map(lambda c: fn(c) if isinstance(c, str) else [])
-
-
-def tokenize_batch(contents: Iterable[str], mode: str = "code") -> List[List[str]]:
-    fn = get_tokenizer(mode)
-    return [fn(c) if isinstance(c, str) else [] for c in contents]
-
-
-def make_tokenize_udf(mode: str = "code"):
-    """Arrow-vectorized pandas UDF: content:string -> array<string>."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def tokenize_udf(contents: pd.Series) -> pd.Series:
-        return tokenize_series(contents, mode)
-
-    return tokenize_udf
 
 
 def make_tfmap_udf(mode: str = "code"):

@@ -125,7 +125,7 @@ def test_multi_word_phrase_does_not_match_inside_identifier(spark, tmp_path):
     assert hits[0][1] != hits2[0][1]
 
 
-def test_batch_phrases_and_k_truncation(spark, pidx):
+def test_batch_phrases_and_k_truncation(spark, pidx, monkeypatch):
     index, corpus = pidx
     qdf = spark.createDataFrame(
         [(7, "import"), (8, "def import"), (9, "zzqqabsent")],
@@ -138,6 +138,19 @@ def test_batch_phrases_and_k_truncation(spark, pidx):
     assert sorted(by_q[8]) == _brute(spark, index, corpus, "def import", 2)
     assert 9 not in by_q
     assert all(len(v) <= 2 for v in by_q.values())
+
+    # the same phrases with the stats cache armed: the rarest-term df
+    # lookup reads the cache (the stats table is not opened) and the
+    # results are identical to the filtered-read run above
+    index.preload_term_stats(spark)
+    try:
+        with monkeypatch.context() as mp:
+            mp.setattr(index, "term_stats", lambda _spark: pytest.fail(
+                "phrase read the stats table with the cache armed"))
+            cached = phrase_query_batch(spark, index, qdf, k=2).collect()
+    finally:
+        index._stats_cache = None
+    assert sorted(map(tuple, cached)) == sorted(map(tuple, rows))
 
 
 def _brute_slop(spark, index, corpus, phrase, k, slop):

@@ -172,23 +172,59 @@ def test_extend_under_live_service_drops_caches(spark, tmp_path):
 def test_batch_query_preloaded_stats_bit_identical(spark, zidx, monkeypatch):
     """_resolve_query_terms: the zero-job driver-side stats resolution must
     return bit-identical batches to the filtered stats read, for both the
-    pruned and exact paths."""
+    pruned and exact paths, and _qt_rows_driver must hand back the same
+    rows (same dicts, same order) from either stats source — including
+    for a batch that repeats a query_id."""
     qdf = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    pairs = QUERIES + [(2, "import class")]
     for prune in (True, False):
         zidx._stats_cache = None
         # below AUTO_PRELOAD_MAX_TERMS the cold leg would arm the cache
-        # itself; a zero cap keeps it on _stats_rows_for_terms
+        # itself; a zero cap keeps it on _term_stats' filtered read
         with monkeypatch.context() as mp:
             mp.setattr("flatnav_spark.query.AUTO_PRELOAD_MAX_TERMS", 0)
             cold = sorted(
                 (r.query_id, r.rank, r.doc_id, r.score)
                 for r in batch_query(spark, zidx, qdf, k=5, prune=prune).collect()
             )
+            cold_rows = _qt_rows_driver(spark, zidx, pairs)
             assert zidx._stats_cache is None
         zidx.preload_term_stats(spark)
         fast = sorted(
             (r.query_id, r.rank, r.doc_id, r.score)
             for r in batch_query(spark, zidx, qdf, k=5, prune=prune).collect()
         )
+        fast_rows = _qt_rows_driver(spark, zidx, pairs)
         zidx._stats_cache = None
         assert fast == cold
+        assert fast_rows == cold_rows
+        assert [(r["query_id"], r["term"]) for r in cold_rows[-2:]] == [
+            (2, "class"), (2, "import")]
+
+
+def test_repeated_query_id_keeps_every_pair():
+    """A batch that repeats a query_id resolves every pair's distinct
+    terms, in pair order; on an armed cache this is pure Python (no
+    Spark session is passed)."""
+    from flatnav_spark.index_io import MANIFEST_VERSION, IndexManifest, LoadedIndex
+
+    m = IndexManifest(version=MANIFEST_VERSION, tokenizer_mode="simple",
+                      k1=1.2, b=0.75, block_range=64, n_splits=1,
+                      chunk_blocks=1, n_docs=10, total_dl=100, n_terms=3,
+                      n_postings=6, config_hash="")
+    index = LoadedIndex("unused", m)
+
+    def st(df, f10=None):
+        return {"df": df, "floor_dl10": f10, "floor_dl100": None}
+
+    index._stats_cache = {"alpha": st(3, 7), "beta": st(1), "gamma": st(2)}
+    rows = _qt_rows_driver(None, index, [
+        (7, "beta alpha beta"), (8, None), (9, ""),
+        (7, "gamma zzabsent alpha"), (8, "Beta")])
+    assert rows == [
+        {"query_id": 7, "term": "alpha", **st(3, 7)},
+        {"query_id": 7, "term": "beta", **st(1)},
+        {"query_id": 7, "term": "alpha", **st(3, 7)},
+        {"query_id": 7, "term": "gamma", **st(2)},
+        {"query_id": 8, "term": "beta", **st(1)},
+    ]
