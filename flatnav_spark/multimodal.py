@@ -170,23 +170,6 @@ def golden_feature_rows(n_assets: int, dim: int = FEATURE_DIM) -> pd.DataFrame:
     )
 
 
-def golden_decoded(n_assets: int) -> pd.DataFrame:
-    """Reference computation of decode_images over synth_assets (see
-    golden_feature_rows)."""
-    rows = {"asset_id": [], "width": [], "height": [], "channels": [],
-            "n_bytes": [], "payload_sha": []}
-    for i in range(n_assets):
-        w, h = 8 + (i % 5), 8 + (i % 7)
-        dw, dh, c, payload = _decode_one(synth_asset_bytes(i, w, h))
-        rows["asset_id"].append(i)
-        rows["width"].append(dw)
-        rows["height"].append(dh)
-        rows["channels"].append(c)
-        rows["n_bytes"].append(len(payload))
-        rows["payload_sha"].append(hashlib.sha256(payload).hexdigest())
-    return pd.DataFrame(rows)
-
-
 def resize_stub(assets_df, width: int, height: int):
     """Resize operator: plumbing only — raises at execution for real media,
     passes fixture payloads through a deterministic down-sample."""

@@ -939,8 +939,8 @@ def _fuzzy_matches(vocab, fuzzies):
     distance > d) — which together reject the overwhelming share of a
     zipf vocabulary, turning the sweep from O(|vocab|) DPs into
     O(survivors) DPs (measured 18x — 14.55 s -> 0.81 s for 20 patterns
-    over a ~120k-term dict, identical expansions; bench/pattern_bench.py,
-    BENCH/BASELINE.md "Pattern queries at scale")."""
+    over a ~120k-term dict, identical expansions; BENCH/BASELINE.md
+    "Pattern queries at scale")."""
     if not fuzzies:
         return {}
     specs = [(b, d, set(b)) for b, d in sorted(fuzzies)]

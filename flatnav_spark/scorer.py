@@ -27,13 +27,6 @@ class BM25Params:
     k1: float = 1.2
     b: float = 0.75
 
-    def to_dict(self) -> dict:
-        return {"k1": self.k1, "b": self.b}
-
-    @staticmethod
-    def from_dict(d: dict) -> "BM25Params":
-        return BM25Params(k1=float(d["k1"]), b=float(d["b"]))
-
 
 def idf(df: np.ndarray, n_docs: int) -> np.ndarray:
     """Lucene BM25 idf, float64, elementwise over df."""

@@ -114,9 +114,13 @@ class StandingQueryService:
         self, queries: List[Tuple[int, str]], collect_metrics: bool = False,
     ) -> Dict[int, List[Tuple[int, int, float]]]:
         """Answer [(query_id, query_text)] -> {query_id: [(rank, doc_id,
-        score)]}. Repeat texts are seeded from the threshold cache; every
-        answered query updates it. Results are bit-identical to a cold
-        batch_query (the seed is a true lower bound; tested). The pairs go
+        score)]}. Repeat texts are seeded from the threshold cache, and
+        every answered id given with one text updates it. Results are
+        bit-identical to a cold batch_query (the seed is a true lower
+        bound; tested). An id given with several texts is scored over the
+        union of their terms, so its k-th score bounds none of them alone
+        and is not cached; any one text's cached k-th still seeds it,
+        because term contributions are nonnegative. The pairs go
         straight to the term resolver and the passes run through
         batch_query's own pass loop (query._batch_passes). A one-task
         batch on a preloaded index is scored and ranked on the driver,
@@ -141,10 +145,13 @@ class StandingQueryService:
         for qid, rank, doc_id, score in rows:
             out.setdefault(int(qid), []).append(
                 (int(rank), int(doc_id), float(score)))
-        text_of = dict(queries)
+        text_of: Dict[int, Optional[str]] = {}
+        for qid, text in queries:
+            text_of[qid] = text if text_of.get(qid, text) == text else None
         for qid, hits in out.items():
             hits.sort()
-            self._remember(text_of[qid], [s for _, _, s in hits])
+            if text_of[qid] is not None:
+                self._remember(text_of[qid], [s for _, _, s in hits])
         return out
 
     def search_one(self, query_text: str) -> List[Tuple[int, int, float]]:

@@ -507,17 +507,6 @@ def ivf_duckdb_oracle_sql(
     return "\n".join(parts)
 
 
-def lsh_recall_at_k(spark, embeddings: DataFrame, queries: DataFrame, k: int = 10,
-                    **lsh_kwargs) -> float:
-    """Measured recall@k of the LSH path vs the exact brute-force oracle —
-    the compute_recall analog (experiments/plotting/metrics.py:53-66)."""
-    exact = cosine_topk(embeddings, queries, k=k)
-    approx = lsh_cosine_topk(embeddings, queries, k=k, **lsh_kwargs)
-    hit = exact.join(approx, ["qid", "vec_id"], "left_semi").count()
-    total = exact.count()
-    return hit / total if total else 1.0
-
-
 def lsh_duckdb_oracle_sql(
     dim: int,
     k: int,

@@ -6,7 +6,8 @@ caches when the index is extended underneath it."""
 import pytest
 
 from flatnav_spark.build import build_index, extend_index
-from flatnav_spark.query import _pass_partitions, _qt_rows_driver, batch_query
+from flatnav_spark.query import (_pass_partitions, _qt_rows_driver, batch_query,
+                                 query_one)
 from flatnav_spark.service import StandingQueryService
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -131,6 +132,26 @@ def test_search_one_seeded_repeat_identical(spark, zidx):
     assert svc.cached_thresholds == 1
     again = svc.search_one("vaaaaaaa0 import")
     assert again == first
+
+
+@pytest.mark.parametrize("pairs,cached", [
+    ([(1, "parseIndex"), (1, "self")], 1),
+    ([(1, "parseIndex"), (1, "import")], 1),
+    ([(1, "self"), (1, "self")], 2),
+])
+def test_repeated_query_id_caches_no_threshold(spark, zidx, pairs, cached):
+    # an id given with two texts is scored over the union of their terms,
+    # so its k-th score is no lower bound for either text alone: caching
+    # it would over-prune the next repeat. One text given twice counts
+    # its terms once, so that id's k-th is the text's own and is cached.
+    svc = StandingQueryService(spark, zidx, k=5)
+    out = svc.search_batch(pairs + [(2, "def")])
+    assert sorted(out) == [1, 2]
+    assert svc.cached_thresholds == cached
+    for _, text in pairs:
+        cold = query_one(spark, zidx, text, k=5)
+        assert len(cold) == 5
+        assert svc.search_one(text) == cold
 
 
 def test_threshold_cache_fifo_eviction(spark, zidx):
