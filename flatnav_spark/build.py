@@ -165,12 +165,10 @@ def _plan_input_bytes(corpus_df) -> Optional[int]:
 def _resume_n_groups(done: List[Tuple[str, dict]],
                      n_groups: Optional[int]) -> Optional[int]:
     """The group count a resume must use: the one the numeric-group
-    markers were written with (markers predating the ``n_groups`` key
-    were written by the fixed 8-group default). An explicit ``n_groups``
-    that contradicts the markers is refused — the groups would cover
-    different splits. None: no checkpoint and no explicit count."""
-    numeric = [meta for g, meta in done if str(g).isdigit()]
-    recorded = {int(meta["n_groups"]) for meta in numeric if "n_groups" in meta}
+    markers were written with. An explicit ``n_groups`` that contradicts
+    the markers is refused — the groups would cover different splits.
+    None: no checkpoint and no explicit count."""
+    recorded = {int(meta["n_groups"]) for g, meta in done if str(g).isdigit()}
     if len(recorded) > 1:
         raise ValueError(
             f"stage1 checkpoints disagree on the group count {sorted(recorded)}; "
@@ -183,9 +181,7 @@ def _resume_n_groups(done: List[Tuple[str, dict]],
                 f"which were written with n_groups={marked}; resume with "
                 f"n_groups={marked} or omit it")
         return marked
-    if n_groups is not None:
-        return n_groups
-    return MAX_N_GROUPS if numeric else None
+    return n_groups
 
 
 def _marker_path(out_path: str, group) -> str:
@@ -334,7 +330,7 @@ def _verify_resume_input(corpus_split, n_groups: int, done: List[Tuple[str, dict
     current = {int(r["g"]): (int(r["n"]), int(r["kfp"] or 0)) for r in rows}
     for g, meta in done_numeric.items():
         cur = current.get(g, (0, 0))
-        want = (int(meta.get("n_docs", -1)), int(meta.get("key_fingerprint", 0)))
+        want = (int(meta["n_docs"]), int(meta["key_fingerprint"]))
         if cur != want:
             raise ValueError(
                 f"stage1 group {g} checkpoint was built from different input "
@@ -526,9 +522,9 @@ def build_index(
     current config hash AND whose input (row count + key fingerprint) still
     matches the current corpus (kill-and-restart safe); any mismatch aborts
     the build rather than forking lineage. The group count comes from the
-    markers (legacy markers without it mean 8); an explicit ``n_groups``
-    that differs from theirs raises ValueError. Marker-less group
-    directories (crashed writes) are deleted and redone.
+    markers; an explicit ``n_groups`` that differs from theirs raises
+    ValueError. Marker-less group directories (crashed writes) are deleted
+    and redone.
     """
     from pyspark.sql import functions as F
 
@@ -606,19 +602,17 @@ def _auto_out_partitions(spark, n_docs: int) -> int:
     return max(spark.sparkContext.defaultParallelism, 8, n_docs // 8192)
 
 
-def _docs_layout(docs, metas, parts: int, lo: Optional[int]):
+def _docs_layout(docs, metas, parts: int, lo: int):
     """doc_id-ordered docs layout via the exact zero-job dense-range
     partitioner over the doc-id window [lo, max marker max_doc_id]: doc
     ids are dense-ish by construction (B3; an extend generation's ids
     start at a chunk boundary), and every lineage marker records its group's
     doc-id range, so the window costs no job. Falls back to
-    repartitionByRange when ``lo`` is None or a marker lacks max_doc_id
-    (legacy markers), or past the token-route cap (plan-size guard)."""
+    repartitionByRange past the token-route cap (plan-size guard)."""
     from flatnav_spark.partitioning import (MAX_TOKEN_ROUTE_PARTS,
                                             repartition_dense_range)
 
-    if (lo is None or parts > MAX_TOKEN_ROUTE_PARTS
-            or any("max_doc_id" not in meta for meta in metas)):
+    if parts > MAX_TOKEN_ROUTE_PARTS:
         return docs.repartitionByRange(parts, "doc_id")
     hi = max((meta["max_doc_id"] for meta in metas
               if meta["max_doc_id"] is not None), default=0) + 1
@@ -628,7 +622,7 @@ def _docs_layout(docs, metas, parts: int, lo: Optional[int]):
 def _write_generation(spark, out_path: str, m: IndexManifest,
                       groups: List[Tuple[str, dict]], dirs: Tuple[str, str, str],
                       out_partitions: Optional[int], docs_divisor: int,
-                      docs_lo: Optional[int], prior_stats, labels) -> dict:
+                      docs_lo: int, prior_stats, labels) -> dict:
     """Stage 2 for the stage-1 ``groups`` [(name, marker)]: the term-keyed
     merge of their postings into chunked block-max segments, their docs
     in doc_id order, and per-term stats derived from the segments —
@@ -664,7 +658,7 @@ def _write_generation(spark, out_path: str, m: IndexManifest,
     )
     if out_partitions is None:
         out_partitions = _auto_out_partitions(
-            spark, sum(int(meta.get("n_docs", 0)) for _g, meta in groups))
+            spark, sum(int(meta["n_docs"]) for _g, meta in groups))
     docs_parts = max(out_partitions // docs_divisor, 1)
     chunk_span = m.block_range * m.chunk_blocks
 
@@ -742,9 +736,6 @@ def _write_generation(spark, out_path: str, m: IndexManifest,
         if prior_stats is not None:
             # old stats ⟗ generation stats: O(vocab), no posting-level work
             # on the existing corpus
-            for c in ("floor_dl10", "floor_dl100"):  # legacy stats: treat as absent
-                if c not in prior_stats.columns:
-                    prior_stats = prior_stats.withColumn(c, F.lit(None).cast("long"))
             new = stats.select("term", *[F.col(c).alias(f"{c}_new") for c in stats.columns[1:]])
             stats = prior_stats.join(new, "term", "full_outer").select(
                 "term",
@@ -1039,20 +1030,12 @@ def extend_index(spark, index: LoadedIndex, new_corpus_df,
     fresh = new_corpus_df.join(s1_docs, ["repo", "path", "commit"], "left_anti")
 
     # chunk boundary above every existing doc_id, from the lineage markers
-    # (written at group-write time via Observation) — zero Spark jobs; one
-    # narrow fallback agg only for pre-round-4 markers lacking max_doc_id
+    # (written at group-write time via Observation) — zero Spark jobs
     S = m.n_splits
     chunk_span = m.block_range * m.chunk_blocks
-    if all("max_doc_id" in meta for _g, meta in complete):
-        ids = [meta["max_doc_id"] for _g, meta in complete
-               if meta["max_doc_id"] is not None]
-        max_id = max(ids) if ids else None
-    else:  # legacy index: markers predate max_doc_id
-        max_id = (
-            spark.read.parquet(*_group_docs_paths(out_path))
-            .agg(F.max("doc_id")).collect()[0][0]
-        )
-    boundary = ((int(max_id) // chunk_span) + 1) * chunk_span if max_id is not None else 0
+    ids = [meta["max_doc_id"] for _g, meta in complete
+           if meta["max_doc_id"] is not None]
+    boundary = (max(ids) // chunk_span + 1) * chunk_span if ids else 0
 
     # Every existing doc_id < boundary, so for each split the next free
     # ordinal max_ord+1 <= ceil((boundary - split)/S): the per-split offset
@@ -1093,13 +1076,11 @@ def extend_index(spark, index: LoadedIndex, new_corpus_df,
 
     # the generation is the unit of work: partition counts are sized to
     # the NEW docs only (docs at half the merge's), and the docs window
-    # starts at the generation's lowest doc id (markers without
-    # min_doc_id: no window, repartitionByRange)
+    # starts at the generation's lowest doc id
     tag = "-".join(g for g, _meta in pending)
     dirs = (f"postings_{tag}", f"docs_{tag}", f"stats_{tag}")
-    docs_lo = (min((meta["min_doc_id"] for _g, meta in pending
-                    if meta["min_doc_id"] is not None), default=None)
-               if all("min_doc_id" in meta for _g, meta in pending) else None)
+    docs_lo = min((meta["min_doc_id"] for _g, meta in pending
+                   if meta["min_doc_id"] is not None), default=0)
     old_stats_dir = m.stats_dir
     counters = _write_generation(
         spark, out_path, m, pending, dirs, out_partitions, docs_divisor=2,

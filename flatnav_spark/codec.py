@@ -107,23 +107,12 @@ def grouped_gaps(sorted_ids: np.ndarray, group_starts: np.ndarray,
     return gaps
 
 
-def encode_gaps(sorted_ids: np.ndarray, base: int = 0) -> bytes:
-    """Gap-code a strictly-increasing id array (first gap is vs ``base``)."""
-    ids = np.ascontiguousarray(sorted_ids, dtype=np.int64)
-    if ids.size == 0:
-        return b""
-    gaps = np.empty(ids.size, dtype=np.int64)
-    gaps[0] = ids[0] - base
-    np.subtract(ids[1:], ids[:-1], out=gaps[1:])
-    if gaps.min() < 0 or (ids.size > 1 and gaps[1:].min() <= 0):
-        raise ValueError("ids must be strictly increasing and >= base")
-    return varint_encode(gaps)
-
-
-def decode_gaps(buf: bytes, base: int = 0) -> np.ndarray:
-    """Inverse of encode_gaps → int64 ids."""
-    gaps = varint_decode(buf).astype(np.int64)
-    if gaps.size == 0:
-        return gaps
-    gaps[0] += base
-    return np.cumsum(gaps)
+def grouped_prefix_sums(values: np.ndarray, starts: np.ndarray,
+                        counts: np.ndarray) -> np.ndarray:
+    """Per-group inclusive prefix sums of a concatenation of groups
+    (group g = values[starts[g] : starts[g] + counts[g]]) — the inverse
+    of grouped_gaps up to each group's base: ids - repeat(bases, counts).
+    Vectorized: global cumsum minus each group's carried-in offset."""
+    c = np.cumsum(values)
+    carry = c[starts] - values[starts]
+    return c - np.repeat(carry, counts)

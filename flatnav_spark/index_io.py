@@ -10,7 +10,8 @@ On-disk layout under ``<path>/``:
 
     manifest.json        schema version, tokenizer mode, BM25 params,
                          block_range, n_splits, corpus stats (N, avgdl),
-                         build metrics, per-stage checkpoint lineage
+                         build metrics (incl. max_dl, the longest doc),
+                         per-stage checkpoint lineage (the markers below)
     docs/                (doc_id, repo, path, commit, lang, content_sha, dl)
                          range-partitioned + sorted by doc_id
     postings/            (term, chunk_id, n, block_ids[], block_counts[],
@@ -21,10 +22,17 @@ On-disk layout under ``<path>/``:
                          skip data; the gorder/RCM locality analog
                          (Reordering.h:26-200): layout chosen so a query's
                          term lookups hit few row groups
-    stats/               (term, df, cf)
+    stats/               (term, df, cf, floor_dl10, floor_dl100): the
+                         floors are the least max_dl of the term's
+                         segments holding >= 10 / >= 100 postings (null
+                         when none does), the query path's WAND floors
     _stage1/             per-group build checkpoints: group=*/docs is ONE
                          combined zstd table (doc_id, repo, path, commit,
-                         lang, content_sha, dl, tfmap) + _DONE.json lineage
+                         lang, content_sha, dl, tfmap) + a _DONE.json
+                         lineage marker: group, config_hash, n_docs,
+                         input/key fingerprints, min_doc_id / max_doc_id
+                         (null for an empty group) and, on numeric build
+                         groups, n_groups
 """
 
 from __future__ import annotations
@@ -41,7 +49,10 @@ from flatnav_spark.scorer import BM25Params
 # v3: chunked postings — one row per (term, chunk of chunk_blocks doc-id
 # blocks) with per-block sub-run skip arrays (block_ids/block_counts/
 # block_max_tf/block_min_dl); per-run gap restart in docs_bin
-MANIFEST_VERSION = 3
+# v4: every reader assumes what the writers emit — markers carry min/max
+# doc_id (and n_groups on build groups), stats carry the floor columns,
+# metrics carry max_dl; v3 indexes and checkpoints are refused
+MANIFEST_VERSION = 4
 
 
 @dataclass
@@ -128,9 +139,8 @@ class LoadedIndex:
         # Arrow collect (toPandas) instead of the row-based collect():
         # materializing 10^5-10^6 Row objects driver-side was the slow
         # part of arming the cache (r6; guide §6 Arrow-for-driver-transfers)
-        stats = self.term_stats(spark)
         self._stats_cache = stats_dict(
-            stats.select(*stats_columns(stats)).toPandas())
+            self.term_stats(spark).select(*STATS_COLUMNS).toPandas())
         return len(self._stats_cache)
 
     def docs(self, spark):
@@ -163,23 +173,18 @@ class LoadedIndex:
         }
 
 
-def stats_columns(stats) -> list:
-    """The columns of a term-stats DataFrame a query reads: term, df and
-    the two WAND floor columns where the table has them."""
-    return ["term", "df"] + [
-        c for c in ("floor_dl10", "floor_dl100") if c in stats.columns]
+# the columns of the term-stats table a query reads
+STATS_COLUMNS = ("term", "df", "floor_dl10", "floor_dl100")
 
 
 def stats_dict(pdf) -> dict:
     """{term: {"df", "floor_dl10", "floor_dl100"}} from a pandas frame of
-    stats_columns: the one row shape every query front end resolves its
-    terms to. An absent or null floor is None (nullable int columns
-    arrive as float NaN)."""
+    STATS_COLUMNS: the one row shape every query front end resolves its
+    terms to. A null floor is None (nullable int columns arrive as float
+    NaN)."""
     import pandas as pd
 
     def floors(c):
-        if c not in pdf.columns:
-            return [None] * len(pdf)
         return [None if pd.isna(v) else int(v) for v in pdf[c].tolist()]
 
     return {

@@ -103,7 +103,7 @@ def postings_table(spark, index: LoadedIndex):
     """Decode chunked segments to (term, doc_id, tf, dl) — diagnostics
     view. Each row's docs_bin is a concatenation of per-block gap runs
     (first gap of a run coded against that block's base)."""
-    from flatnav_spark.codec import varint_decode
+    from flatnav_spark.codec import grouped_prefix_sums, varint_decode
 
     block_range = index.manifest.block_range
 
@@ -117,9 +117,8 @@ def postings_table(spark, index: LoadedIndex):
                 np.cumsum(counts[:-1], out=starts[1:])
                 # restart each run at its block base
                 bases = np.asarray(row.block_ids, dtype=np.int64) * block_range
-                c = np.cumsum(gaps)
-                carry = c[starts] - gaps[starts]
-                ids = c - np.repeat(carry, counts) + np.repeat(bases, counts)
+                ids = (grouped_prefix_sums(gaps, starts, counts)
+                       + np.repeat(bases, counts))
                 terms.append(np.repeat(np.array([row.term], dtype=object), len(ids)))
                 doc_ids.append(ids)
                 tfs.append(varint_decode(row.tfs_bin).astype(np.int64))

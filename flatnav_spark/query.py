@@ -77,8 +77,8 @@ from typing import Dict, List, Optional, Tuple
 import numpy as np
 import pandas as pd
 
-from flatnav_spark.codec import varint_decode
-from flatnav_spark.index_io import LoadedIndex, stats_columns, stats_dict
+from flatnav_spark.codec import grouped_prefix_sums, varint_decode
+from flatnav_spark.index_io import STATS_COLUMNS, LoadedIndex, stats_dict
 from flatnav_spark.partitioning import repartition_dense_range
 from flatnav_spark.scorer import get_scorer
 from flatnav_spark.tokenizer import get_tokenizer
@@ -153,16 +153,6 @@ class _QueryPlan:
         flat = base + np.arange(total, dtype=np.int64)
         rows = np.repeat(np.arange(len(tids), dtype=np.int64), lens)
         return flat, rows, lens
-
-
-def _grouped_prefix_sums(values: np.ndarray, starts: np.ndarray,
-                         counts: np.ndarray) -> np.ndarray:
-    """Per-group inclusive prefix sums of a concatenation of groups
-    (group g = values[starts[g] : starts[g] + counts[g]]). Vectorized:
-    global cumsum minus each group's carried-in offset."""
-    c = np.cumsum(values)
-    carry = c[starts] - values[starts]
-    return c - np.repeat(carry, counts)
 
 
 def _make_partition_scorer(
@@ -331,7 +321,7 @@ def _make_partition_scorer(
             assert gaps.size == int(d_run_count.sum()) == tfs.size == dls.size
             # per-RUN gap cumsum -> local doc index in [0, block_range)
             # (the first gap of each sub-run is coded against its block base)
-            li_all = _grouped_prefix_sums(gaps, d_run_start, d_run_count)
+            li_all = grouped_prefix_sums(gaps, d_run_start, d_run_count)
             tfn_all = scorer.tfn(tfs, dls, avgdl, params)
 
             # map each global run id -> its posting slice in decoded space
@@ -456,9 +446,8 @@ def _term_stats(spark, index: LoadedIndex, terms) -> Dict[str, dict]:
         return {t: cache[t] for t in terms if t in cache}
     if not terms:
         return {}
-    stats = index.term_stats(spark)
-    return stats_dict(_filter_to_terms(spark, stats, sorted(terms))
-                      .select(*stats_columns(stats)).toPandas())
+    return stats_dict(_filter_to_terms(spark, index.term_stats(spark), sorted(terms))
+                      .select(*STATS_COLUMNS).toPandas())
 
 
 def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
@@ -528,7 +517,7 @@ def _score_floor_by_qid(qt_rows, m, scorer, k: int) -> Dict[int, float]:
     chunk-prefix sampling pre-pass measured net-negative there (+3.5 s at
     N8 for +0.00 seg prune frac); threshold REUSE across batches
     (seed_thr_by_qid) is the scale path for standing query services."""
-    max_dl = int(m.metrics.get("max_dl", 0) or 0)
+    max_dl = int(m.metrics["max_dl"])
     use10 = k <= 10
     use100 = k <= 100
 
@@ -619,11 +608,8 @@ def _n_chunks_upper(m) -> int:
     undercount); used only to size contiguous chunk ranges — a stale
     bound clamps into the last range, never errors."""
     span = m.block_range * m.chunk_blocks
-    ids = [
-        meta.get("max_doc_id")
-        for meta in m.lineage.values()
-        if isinstance(meta, dict) and meta.get("max_doc_id") is not None
-    ]
+    ids = [meta["max_doc_id"] for meta in m.lineage.values()
+           if meta["max_doc_id"] is not None]
     hi = max(max(ids) + 1 if ids else 0, m.n_docs)
     return max(1, -(-hi // span))
 
@@ -1040,9 +1026,8 @@ def expand_query_patterns(spark, index: LoadedIndex, pairs,
             cond = c if cond is None else (cond | c)
         if cond is None:
             return []
-        stats = index.term_stats(spark)
         vocab = stats_dict(
-            stats.filter(cond).select(*stats_columns(stats)).toPandas())
+            index.term_stats(spark).filter(cond).select(*STATS_COLUMNS).toPandas())
     match_of = {
         p: sorted(t for t in vocab if t.startswith(p)) for p in all_prefixes
     }

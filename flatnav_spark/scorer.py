@@ -42,14 +42,6 @@ def tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float, params: BM25Params) ->
     return tf64 * (params.k1 + 1.0) / denom
 
 
-def block_max_tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, params: BM25Params) -> float:
-    """Upper bound of tfn over a posting block (WAND block-max summary).
-
-    Stored idf-free so block encoding needs no global df; the query path
-    multiplies by idf(df) to get the block's score upper bound."""
-    return float(tf_norm(tf, dl, avgdl, params).max())
-
-
 # ---------------------------------------------------------------------------
 # Pluggable scorer interface — the CRTP distance-interface analog
 # (include/flatnav/distances/DistanceInterface.h:22-59, dispatched L2 vs IP

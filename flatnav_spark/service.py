@@ -37,6 +37,7 @@ from typing import Dict, List, Optional, Tuple
 from flatnav_spark.index_io import LoadedIndex
 from flatnav_spark.query import (_batch_passes, _check_approx_factor,
                                  _qt_rows_driver, _wand_accumulators, query_one)
+from flatnav_spark.scorer import get_scorer
 
 
 def _index_stamp(index: LoadedIndex) -> tuple:
@@ -69,6 +70,7 @@ class StandingQueryService:
         # TRUE scores is a valid lower bound on the exact k-th score, so
         # a bound cached from an approximate answer never over-prunes an
         # exact run, and vice versa.
+        get_scorer(scorer)
         _check_approx_factor(approx_factor)
         self.spark = spark
         self.index = index

@@ -6,13 +6,35 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flatnav_spark.codec import decode_gaps, encode_gaps, varint_decode, varint_encode
+from flatnav_spark.codec import (encode_groups, grouped_gaps, grouped_prefix_sums,
+                                  varint_decode, varint_encode)
+
+
+def _runs(ids, block_range):
+    """The encoder's run layout: one run per doc-id block, gaps coded
+    against the block base. Returns (run starts, run counts, bases)."""
+    blocks = ids // block_range
+    starts = np.flatnonzero(np.diff(blocks, prepend=-1))
+    counts = np.diff(np.append(starts, ids.size))
+    return starts, counts, blocks[starts] * block_range
+
+
+def _roundtrip(ids, block_range):
+    """ids -> grouped_gaps -> encode_groups -> varint_decode -> prefix
+    sums: the path from the segment encoder to the chunk kernel. Returns
+    (decoded ids, encoded byte count)."""
+    starts, counts, bases = _runs(ids, block_range)
+    buf = b"".join(encode_groups(grouped_gaps(ids, starts, bases), starts))
+    gaps = varint_decode(buf).astype(np.int64)
+    return grouped_prefix_sums(gaps, starts, counts) + np.repeat(bases, counts), len(buf)
 
 
 def test_empty():
     assert varint_encode(np.array([], dtype=np.int64)) == b""
     assert varint_decode(b"").size == 0
-    assert encode_gaps(np.array([], dtype=np.int64)) == b""
+    empty = np.array([], dtype=np.int64)
+    assert grouped_gaps(empty, empty, empty).size == 0
+    assert encode_groups(empty, empty) == []
 
 
 def test_known_values():
@@ -45,36 +67,33 @@ def test_varint_roundtrip(values):
 @settings(max_examples=200, deadline=None)
 @given(
     st.sets(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=300),
-    st.integers(min_value=0, max_value=10),
+    st.sampled_from([1, 64, 4096]),
 )
-def test_gap_roundtrip(id_set, base_off):
+def test_gap_roundtrip(id_set, block_range):
     ids = np.array(sorted(id_set), dtype=np.int64)
-    base = int(ids[0]) - base_off
-    out = decode_gaps(encode_gaps(ids, base), base)
+    out, _ = _roundtrip(ids, block_range)
     np.testing.assert_array_equal(out, ids)
 
 
 def test_gaps_require_increasing():
+    # a negative gap is refused: an id below its predecessor in the run...
     with pytest.raises(ValueError):
-        encode_gaps(np.array([5, 5], dtype=np.int64))
+        grouped_gaps(np.array([5, 3], dtype=np.int64), np.array([0]), np.array([0]))
+    # ...or a run's first id below its base
     with pytest.raises(ValueError):
-        encode_gaps(np.array([5, 3], dtype=np.int64))
-    with pytest.raises(ValueError):
-        encode_gaps(np.array([2], dtype=np.int64), base=5)
+        grouped_gaps(np.array([2, 9], dtype=np.int64), np.array([0, 1]),
+                     np.array([0, 10]))
 
 
 def test_compression_effective():
     # dense ascending ids must gap-code to ~1 byte/id
     ids = np.arange(10_000, dtype=np.int64) * 3 + 7
-    buf = encode_gaps(ids, 0)
-    assert len(buf) < 10_200
+    out, n_bytes = _roundtrip(ids, 4096)
+    np.testing.assert_array_equal(out, ids)
+    assert n_bytes < 10_200
 
 
 def test_grouped_prefix_sums_matches_per_group_cumsum():
-    import numpy as np
-
-    from flatnav_spark.query import _grouped_prefix_sums
-
     rng = np.random.default_rng(7)
     for _ in range(20):
         n_groups = int(rng.integers(1, 8))
@@ -82,7 +101,7 @@ def test_grouped_prefix_sums_matches_per_group_cumsum():
         values = rng.integers(0, 50, size=int(counts.sum()))
         starts = np.zeros(n_groups, dtype=np.int64)
         np.cumsum(counts[:-1], out=starts[1:])
-        got = _grouped_prefix_sums(values, starts, counts)
+        got = grouped_prefix_sums(values, starts, counts)
         expected = np.concatenate([
             np.cumsum(values[s: s + c]) for s, c in zip(starts, counts)
         ])

@@ -140,6 +140,31 @@ def test_driver_pass_approx_matches_one_spark_task(spark, indexes, name):
         assert driver == _ranked(cand, k)
 
 
+@pytest.mark.parametrize("prune", [False, True])
+def test_query_one_multi_task_pass_matches_batch_query(spark, indexes,
+                                                      monkeypatch, prune):
+    # every fixture query sizes to one task; a one-posting task target
+    # sends query_one down its Spark branch with more than one task
+    from flatnav_spark import query
+
+    index, _ = indexes["zipf"]
+    monkeypatch.setattr(query, "TARGET_POSTINGS_PER_TASK", 1)
+    k = 5
+    # the texts with an indexed term (the others never reach a pass)
+    texts = [t for t in ZIPF_QUERIES if _qt_rows_driver(spark, index, [(0, t)])]
+    assert len(texts) >= 3
+    exact = _rows(batch_query(spark, index, _qdf(spark, texts), k=k,
+                              prune=False, num_partitions=3))
+    assert _rows(batch_query(spark, index, _qdf(spark, texts), k=k,
+                             prune=prune)) == exact
+    for qid, text in enumerate(texts):
+        assert _pass_partitions(
+            spark, _qt_rows_driver(spark, index, [(0, text)]), None) > 1
+        want = [(r, d, s) for q, r, d, s in exact if q == qid]
+        assert want
+        assert query_one(spark, index, text, k=k, prune=prune) == want
+
+
 def test_empty_term_queries(spark, indexes):
     index, _ = indexes["fixture"]
     assert batch_query(spark, index, _qdf(spark, [NO_TERMS])).collect() == []

@@ -217,33 +217,106 @@ def test_extend_invalidates_preloaded_stats_cache(spark, tmp_path):
     assert sorted((rk, d, s) for rk, d, s in res) == batch
 
 
+def _tree(path):
+    import os
+
+    return sorted((os.path.relpath(os.path.join(d, f), path),
+                   os.stat(os.path.join(d, f)).st_mtime_ns)
+                  for d, _dirs, files in os.walk(path) for f in files)
+
+
 def test_rebuild_refuses_unreadable_manifest(spark, tmp_path):
-    """Rebuilding over an index whose manifest this code CANNOT read (e.g.
-    written by a newer schema version) must refuse, not silently fall back
-    to a fresh in-place build that overwrites directories the newer
-    manifest still references (round-4 ADVICE)."""
+    """An index whose manifest this code CANNOT read — written by a newer
+    schema version (99) or by an older one (v3, which predates the marker
+    and stats fields every reader now assumes) — is refused by load,
+    extend and an in-place rebuild, and nothing is written. A rebuild
+    must not silently fall back to a fresh in-place build that overwrites
+    directories the unreadable manifest still references (round-4
+    ADVICE)."""
+    import glob
     import json
     import os
 
-    out = str(tmp_path / "index")
+    from flatnav_spark import build
+    from flatnav_spark.index_io import load_index
+    from flatnav_spark.scorer import BM25Params
+
     rows = synth_corpus(40, seed=5)
-    build_index(spark.createDataFrame(rows, SCHEMA), out, mode="code",
-                n_splits=4, n_groups=1, block_range=64, out_partitions=2)
-    mpath = os.path.join(out, "manifest.json")
-    with open(mpath) as f:
-        d = json.load(f)
-    d["version"] = 99  # simulate a newer, unknown schema
-    with open(mpath, "w") as f:
-        json.dump(d, f)
-    # resume=True is the in-place path (resume=False explicitly clears the
-    # whole directory first): it must refuse, not rebuild over tables the
-    # unreadable manifest still references
-    with pytest.raises(ValueError, match="refusing to rebuild"):
-        build_index(spark.createDataFrame(rows, SCHEMA), out, mode="code",
-                    n_splits=4, n_groups=1, block_range=64, out_partitions=2,
-                    resume=True)
-    # the existing tables were left untouched
-    assert os.path.isdir(os.path.join(out, "postings"))
+    kw = dict(mode="code", n_splits=4, n_groups=1, block_range=64, out_partitions=2)
+    for version in (99, 3):
+        out = str(tmp_path / f"v{version}")
+        index = build_index(spark.createDataFrame(rows, SCHEMA), out, **kw)
+        mpath = os.path.join(out, "manifest.json")
+        with open(mpath) as f:
+            d = json.load(f)
+        d["version"] = version
+        if version == 3:
+            # what a v3 build left: its own config hash on the manifest and
+            # every marker, and markers/metrics without the v4 fields
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(build, "MANIFEST_VERSION", 3)
+                v3_hash = build._config_hash("code", BM25Params(), 64, 4)
+            d["config_hash"] = v3_hash
+            del d["metrics"]["max_dl"]
+            for marker in glob.glob(os.path.join(out, "_stage1", "*", "_DONE.json")):
+                with open(marker) as f:
+                    meta = json.load(f)
+                for key in ("n_groups", "min_doc_id", "max_doc_id"):
+                    meta.pop(key)
+                meta["config_hash"] = v3_hash
+                with open(marker, "w") as f:
+                    json.dump(meta, f)
+        with open(mpath, "w") as f:
+            json.dump(d, f)
+        before = _tree(out)
+        with pytest.raises(ValueError, match=f"manifest version {version}"):
+            load_index(out)
+        with pytest.raises(ValueError, match=f"manifest version {version}"):
+            extend_index(spark, index, spark.createDataFrame(
+                synth_corpus(10, seed=6, start=40), SCHEMA))
+        # resume=True is the in-place path (resume=False explicitly clears
+        # the whole directory first): it must refuse, not rebuild over
+        # tables the unreadable manifest still references
+        with pytest.raises(ValueError, match="refusing to"):
+            build_index(spark.createDataFrame(rows, SCHEMA), out, resume=True, **kw)
+        assert _tree(out) == before, version
+
+
+def test_every_writer_emits_the_v4_shape(spark, tmp_path):
+    """What every reader assumes of a v4 index, pinned on the three
+    writers: build_index, import_postings and extend_index."""
+    import glob
+    import json
+    import os
+
+    from flatnav_spark.build import import_postings
+
+    def shape(index):
+        markers = []
+        for f in glob.glob(os.path.join(index.path, "_stage1", "*", "_DONE.json")):
+            with open(f) as fh:
+                markers.append(json.load(fh))
+        for meta in markers:
+            assert {"min_doc_id", "max_doc_id"} <= meta.keys(), meta
+            assert "n_groups" in meta or not str(meta["group"]).isdigit(), meta
+        assert {"floor_dl10", "floor_dl100"} <= set(index.term_stats(spark).columns)
+        with open(os.path.join(index.path, "manifest.json")) as f:
+            assert "max_dl" in json.load(f)["metrics"]
+        return sorted(str(meta["group"]) for meta in markers)
+
+    rows = synth_corpus(60, seed=5)
+    index = build_index(spark.createDataFrame(rows[:40], SCHEMA), str(tmp_path / "b"),
+                        mode="code", n_splits=4, n_groups=2, block_range=64,
+                        out_partitions=2)
+    assert shape(index) == ["0", "1"]
+    ext = extend_index(spark, index, spark.createDataFrame(rows[40:], SCHEMA),
+                       out_partitions=2)
+    assert shape(ext) == ["0", "1", "ext0"]
+    flat = spark.createDataFrame([("alpha", 0, 2), ("beta", 0, 1), ("alpha", 7, 1)],
+                                 "term string, doc_id long, tf int")
+    imported = import_postings(spark, flat, str(tmp_path / "i"), block_range=64,
+                               n_splits=4, out_partitions=2)
+    assert shape(imported) == ["import0"]
 
 
 def test_extend_keeps_the_books_of_a_fresh_build(spark, tmp_path):

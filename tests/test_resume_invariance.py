@@ -141,8 +141,6 @@ def test_resume_group_count_from_markers():
     assert _resume_n_groups(recorded, 4) == 4
     with pytest.raises(ValueError, match="n_groups=2.*n_groups=4"):
         _resume_n_groups(recorded, 2)
-    # markers from before the count was recorded: the fixed default 8
-    assert _resume_n_groups([("0", {}), ("5", {})], None) == 8
     # extension groups alone say nothing about the build's groups
     assert _resume_n_groups([("ext0", {})], None) is None
 

@@ -8,7 +8,7 @@ import math
 import numpy as np
 
 from flatnav_spark.reference import ReferenceIndex, golden_topk
-from flatnav_spark.scorer import BM25Params, block_max_tfn, idf, tf_norm
+from flatnav_spark.scorer import BM25Params, Bm25Scorer, TfidfIpScorer, idf, tf_norm
 
 
 def test_idf_formula():
@@ -38,11 +38,17 @@ def test_tfn_length_normalization():
 
 
 def test_block_max_is_upper_bound():
+    # the encoder stores a block's (max tf, min dl); tfn_upper over them
+    # bounds every posting's tfn at ANY avgdl, which extend relies on
+    # (the corpus grows, avgdl moves, the stored summaries stay)
     p = BM25Params()
     tf = np.array([1, 3, 2, 8])
     dl = np.array([10, 30, 20, 200])
-    bm = block_max_tfn(tf, dl, 40.0, p)
-    assert (tf_norm(tf, dl, 40.0, p) <= bm).all()
+    for scorer in (Bm25Scorer, TfidfIpScorer):
+        for avgdl in (1.0, 15.0, 40.0, 500.0, 1e6):
+            bound = scorer.tfn_upper(np.array([tf.max()]), np.array([dl.min()]),
+                                     avgdl, p)[0]
+            assert (scorer.tfn(tf, dl, avgdl, p) <= bound).all()
 
 
 def _tiny_corpus():

@@ -125,6 +125,11 @@ def test_service_rejects_approx_factor_below_one(spark, zidx):
                              approx_factor=0.5)
 
 
+def test_service_rejects_unknown_scorer(spark, zidx):
+    with pytest.raises(ValueError, match="unknown scorer"):
+        StandingQueryService(spark, zidx, k=5, scorer="cosine")
+
+
 def test_search_one_seeded_repeat_identical(spark, zidx):
     svc = StandingQueryService(spark, zidx, k=5)
     first = svc.search_one("vaaaaaaa0 import")
