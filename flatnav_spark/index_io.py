@@ -37,9 +37,12 @@ On-disk layout under ``<path>/``:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
+from bisect import bisect_left
+from collections import OrderedDict
 from dataclasses import asdict, dataclass, field, fields
 
 from flatnav_spark.scorer import BM25Params
@@ -126,6 +129,13 @@ class LoadedIndex:
         self.path = path
         self.manifest = manifest
         self._stats_cache = None  # term -> stats dict (preload_term_stats)
+        # postings_rows: every postings row group, listed for the
+        # postings_dirs in _groups_key, and the decoded ones it keeps
+        self._groups_key = None
+        self._groups = []  # (file, footer, row group, term min, term max)
+        self._schema = None  # the postings files' Arrow schema
+        self._decoded = OrderedDict()  # (file, row group) -> Table, LRU first
+        self._decoded_nbytes = 0
 
     def preload_term_stats(self, spark) -> int:
         """Driver-side cache of the term-stats table: query-term stats
@@ -153,6 +163,77 @@ class LoadedIndex:
             *[os.path.join(self.path, d) for d in self.manifest.postings_dirs]
         )
 
+    def postings_rows(self, terms, cols):
+        """The postings rows of ``terms`` (sorted ascending) as a
+        pyarrow.Table of columns ``cols`` (a subset of POSTINGS_COLUMNS),
+        in generation, file and row-group order: the driver pass's reader
+        (query._run_pass_driver). Row groups whose term min/max holds no
+        query term are skipped; the rest are filtered with ``is_in``, as a
+        ``chunk``-strategy optimized file is not term-sorted inside.
+
+        The files' footers are read once per set of postings_dirs, which
+        extend_index and optimize_index sync in place on the caller's
+        handle, so a new generation (or a deleted one) re-lists them and
+        drops every decoded group. A row group is decoded with every
+        POSTINGS_COLUMNS column on first use and kept in a least recently
+        used cache bounded by query.POSTINGS_CACHE_MAX_BYTES of
+        Table.nbytes, so a warm call opens and decompresses no file; a
+        group larger than the budget is used but not kept."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from flatnav_spark.query import POSTINGS_CACHE_MAX_BYTES as budget
+
+        if tuple(self.manifest.postings_dirs) != self._groups_key:
+            self._list_row_groups()
+        parts = []
+        for f, footer, g, lo, hi in self._groups:
+            if lo is not None:
+                i = bisect_left(terms, lo)
+                if i == len(terms) or terms[i] > hi:
+                    continue
+            t = self._decoded.get((f, g))
+            if t is not None:
+                self._decoded.move_to_end((f, g))
+            else:
+                with pq.ParquetFile(f, metadata=footer) as pf:
+                    t = pf.read_row_group(g, columns=list(POSTINGS_COLUMNS),
+                                          use_threads=False)
+                if t.nbytes <= budget:
+                    self._decoded[(f, g)] = t
+                    self._decoded_nbytes += t.nbytes
+                    while self._decoded_nbytes > budget:
+                        _, old = self._decoded.popitem(last=False)
+                        self._decoded_nbytes -= old.nbytes
+            parts.append(t.select(cols))
+        if not parts:
+            return self._schema.empty_table().select(cols)
+        tbl = pa.concat_tables(parts)
+        return tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(terms, pa.string())))
+
+    def _list_row_groups(self) -> None:
+        """(Re)list every postings file's row groups with their term
+        min/max (None when the footer has no statistics) and drop every
+        decoded group."""
+        import pyarrow.parquet as pq
+
+        self._groups_key = tuple(self.manifest.postings_dirs)
+        self._groups = []
+        self._decoded.clear()
+        self._decoded_nbytes = 0
+        for d in self.manifest.postings_dirs:
+            for f in sorted(glob.glob(os.path.join(self.path, d, "*.parquet"))):
+                with pq.ParquetFile(f) as pf:
+                    footer = pf.metadata
+                    self._schema = pf.schema_arrow
+                ti = footer.schema.names.index("term")
+                for g in range(footer.num_row_groups):
+                    st = footer.row_group(g).column(ti).statistics
+                    lo, hi = ((st.min, st.max) if st is not None and st.has_min_max
+                              else (None, None))
+                    self._groups.append((f, footer, g, lo, hi))
+
     def term_stats(self, spark):
         return spark.read.parquet(os.path.join(self.path, self.manifest.stats_dir))
 
@@ -172,6 +253,12 @@ class LoadedIndex:
             "metrics": m.metrics,
         }
 
+
+# the columns of the postings table the chunk kernel reads
+# (query._pass_prologue; the exact path drops the two block bounds)
+POSTINGS_COLUMNS = ("term", "chunk_id", "block_ids", "block_counts",
+                    "block_max_tf", "block_min_dl", "docs_bin", "tfs_bin",
+                    "dls_bin")
 
 # the columns of the term-stats table a query reads
 STATS_COLUMNS = ("term", "df", "floor_dl10", "floor_dl100")

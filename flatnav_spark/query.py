@@ -36,11 +36,13 @@ Plan shape — ONE shuffle on the hot path, no join:
 
 A pass that sizes itself to ONE task (_pass_partitions: the batch's
 summed query-term df is at most TARGET_POSTINGS_PER_TASK) skips steps 2-4
-as Spark work and runs on the driver instead (_run_pass_driver): pyarrow
-reads the query terms' postings rows straight from the parquet files,
-sorts them by (chunk_id, term), and the same kernel scores them as that
-one task would — zero Spark jobs, the embedded-Arrow-engine pattern
-(DataFusion, SIGMOD 2024). One task saw every chunk, so each query's
+as Spark work and runs on the driver instead (_run_pass_driver): the
+query terms' postings rows come from the index handle
+(LoadedIndex.postings_rows, which lists the files' footers once and keeps
+decoded row groups up to POSTINGS_CACHE_MAX_BYTES, so a warm call opens
+no file), are sorted by (chunk_id, term), and the same kernel scores them
+as that one task would — zero Spark jobs, the embedded-Arrow-engine
+pattern (DataFusion, SIGMOD 2024). One task saw every chunk, so each query's
 top-k is final and is ranked on the driver; ``batch_query`` is then
 eager and returns the ranked rows as an Arrow-built LocalRelation
 (collected with no job), and StandingQueryService.search_batch takes the
@@ -70,7 +72,6 @@ skipped entirely while no query has a full top-k yet, so pruning costs
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from typing import Dict, List, Optional, Tuple
 
@@ -78,7 +79,8 @@ import numpy as np
 import pandas as pd
 
 from flatnav_spark.codec import grouped_prefix_sums, varint_decode
-from flatnav_spark.index_io import STATS_COLUMNS, LoadedIndex, stats_dict
+from flatnav_spark.index_io import (POSTINGS_COLUMNS, STATS_COLUMNS, LoadedIndex,
+                                    stats_dict)
 from flatnav_spark.partitioning import repartition_dense_range
 from flatnav_spark.scorer import get_scorer
 from flatnav_spark.tokenizer import get_tokenizer
@@ -476,6 +478,13 @@ def _resolve_query_terms(spark, index: LoadedIndex, queries_df):
 # QUERY batch, not the vocabulary — the 10^8-term regime keeps working.
 AUTO_PRELOAD_MAX_TERMS = 2_000_000
 
+# Keep up to this many bytes (Table.nbytes) of decoded postings row groups
+# on an index handle for the driver pass (LoadedIndex.postings_rows): the
+# postings never change under a handle, and re-opening and decompressing
+# whole files per call was over half of a warm search_one's driver CPU.
+# The stats cache's order at its cap; 0 turns the cache off.
+POSTINGS_CACHE_MAX_BYTES = 256 << 20
+
 
 def _qt_rows_driver(spark, index: LoadedIndex, pairs) -> List[dict]:
     """Driver-side qt_rows for [(query_id, query_text)] pairs: one row
@@ -567,6 +576,8 @@ def _pass_partitions(spark, qt_rows, num_partitions: Optional[int]) -> int:
     if num_partitions is not None:
         return num_partitions
     est = sum(int(r["df"]) for r in {r["term"]: r for r in qt_rows}.values())
+    if est <= TARGET_POSTINGS_PER_TASK:
+        return 1  # at any cap; spares the JVM round trip below
     cap = spark.sparkContext.defaultParallelism
     return max(1, min(cap, -(-est // TARGET_POSTINGS_PER_TASK)))
 
@@ -654,10 +665,8 @@ def _pass_prologue(index, qt_rows, k, prune, scorer_name, accs,
     # payload_len, max_dl, and the two block-bound arrays on the exact
     # path — would be scanned, shuffled and serialized to Python for
     # nothing).
-    cols = ["term", "chunk_id", "block_ids", "block_counts",
-            "docs_bin", "tfs_bin", "dls_bin"]
-    if prune:
-        cols[4:4] = ["block_max_tf", "block_min_dl"]
+    cols = [c for c in POSTINGS_COLUMNS
+            if prune or c not in ("block_max_tf", "block_min_dl")]
     return plan, part_scorer, cols
 
 
@@ -692,50 +701,19 @@ def _run_pass_driver(index, qt_rows, k, prune, scorer_name, accs,
                      seed_thr_by_qid: Optional[Dict[int, float]] = None,
                      approx_factor: float = 1.0) -> pd.DataFrame:
     """The same pass with no Spark job, for a pass sized to one task:
-    pyarrow reads the query terms' postings rows straight from the
-    parquet files of every postings generation, sorts them into the
-    (chunk_id, term) order the Spark task would see, and the unchanged
-    kernel scores them as that one task. Strings order by UTF-8 bytes in
-    both engines, so the top-k and its float64 scores are identical.
-    Returns the candidates (query_id, doc_id, score) as pandas; the
-    WAND counters are added on the driver.
-
-    The read is one file at a time on the calling thread, skipping row
-    groups whose term min/max holds no query term. pyarrow.dataset's
-    threaded scan of the same rows cost 2-3x the CPU of this read (most
-    of it in pool threads, and varying call to call) for no wall gain
-    at one task's size."""
-    import glob
-    from bisect import bisect_left
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
+    the query terms' postings rows of every generation come from
+    LoadedIndex.postings_rows, which keeps the decoded row groups on the
+    handle (a warm call opens no file), are sorted into the (chunk_id,
+    term) order the Spark task would see, and the unchanged kernel scores
+    them as that one task. Strings order by UTF-8 bytes in both engines,
+    so the top-k and its float64 scores are identical. Returns the
+    candidates (query_id, doc_id, score) as pandas; the WAND counters are
+    added on the driver."""
     plan, part_scorer, cols = _pass_prologue(
         index, qt_rows, k, prune, scorer_name, accs, seed_thr_by_qid,
         approx_factor)
-    terms = plan.terms  # ascending
-
-    def may_hold(st) -> bool:
-        if st is None or not st.has_min_max:
-            return True
-        i = bisect_left(terms, st.min)
-        return i < len(terms) and terms[i] <= st.max
-
-    value_set = pa.array(terms, pa.string())
-    parts = []
-    for d in index.manifest.postings_dirs:
-        for f in sorted(glob.glob(os.path.join(index.path, d, "*.parquet"))):
-            pf = pq.ParquetFile(f)
-            ti = pf.schema.names.index("term")
-            groups = [g for g in range(pf.num_row_groups)
-                      if may_hold(pf.metadata.row_group(g).column(ti).statistics)]
-            if groups or not parts:  # the first read keeps the column types
-                t = pf.read_row_groups(groups, columns=cols, use_threads=False)
-                parts.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
-    tbl = pa.concat_tables(parts).sort_by([("chunk_id", "ascending"),
-                                           ("term", "ascending")])
+    tbl = index.postings_rows(plan.terms, cols).sort_by(
+        [("chunk_id", "ascending"), ("term", "ascending")])
     return next(part_scorer([tbl.to_pandas(use_threads=False)]))
 
 

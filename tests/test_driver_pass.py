@@ -2,8 +2,11 @@
 the unchanged chunk kernel) instead of as a Spark job. It must return
 the Spark path's top-k rank for rank with identical float64 scores, keep
 the WAND counters, and run no Spark job for a preloaded query_one,
-search_batch or Arrow-fed batch_query."""
+search_batch or Arrow-fed batch_query. The decoded row groups it keeps
+on the index handle change no row, follow extend and optimize, and let
+a warm call read no file."""
 
+import os
 import shutil
 
 import pyarrow as pa
@@ -22,6 +25,7 @@ from flatnav_spark.query import (
     batch_query,
     query_one,
 )
+from flatnav_spark.reference import ReferenceIndex
 from flatnav_spark.service import StandingQueryService
 
 RESULT_SCHEMA = "struct<query_id:bigint,rank:int,doc_id:bigint,score:double>"
@@ -255,3 +259,131 @@ def test_result_schema_on_every_path(spark, indexes):
     finally:
         spark.conf.set(key, old)
     assert off_rows == driver.collect()
+
+
+def _rows_and_counters(spark, index, qdf, scorer):
+    res = batch_query(spark, index, qdf, k=5, scorer=scorer,
+                      collect_metrics=True)
+    return _rows(res), {n: int(a.value)
+                        for n, a in res._flatnav_accumulators.items()}
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf_ip"])
+@pytest.mark.parametrize("name", ["fixture", "zipf", "extended", "optimized"])
+def test_postings_cache_changes_no_row(spark, indexes, monkeypatch, name,
+                                       scorer):
+    # a handle with the cache off, a fresh one with it on (cold, then
+    # warm) and handles under budgets below a row group's size give the
+    # same rows, float64 scores and six WAND counters
+    from flatnav_spark import query
+
+    index, texts = indexes[name]
+    qdf = _qdf(spark, texts)
+    _assert_one_task(spark, index, qdf)
+    default = query.POSTINGS_CACHE_MAX_BYTES
+    monkeypatch.setattr(query, "POSTINGS_CACHE_MAX_BYTES", 0)
+    off = load_index(index.path)
+    want = _rows_and_counters(spark, off, qdf, scorer)
+    assert want[0] and not off._decoded and off._decoded_nbytes == 0
+
+    monkeypatch.setattr(query, "POSTINGS_CACHE_MAX_BYTES", default)
+    on = load_index(index.path)
+    assert _rows_and_counters(spark, on, qdf, scorer) == want  # cold
+    assert on._decoded
+    assert _rows_and_counters(spark, on, qdf, scorer) == want  # warm
+
+    # budgets below the largest group (read but not kept) and below the
+    # two smallest together (keeping the second evicts the first)
+    sizes = sorted(t.nbytes for t in on._decoded.values())
+    assert len(sizes) >= 2
+    for budget in (sizes[-1] // 2, sizes[0] + sizes[1] - 1):
+        monkeypatch.setattr(query, "POSTINGS_CACHE_MAX_BYTES", budget)
+        small = load_index(index.path)
+        for _ in range(2):
+            assert _rows_and_counters(spark, small, qdf, scorer) == want
+            assert small._decoded_nbytes == sum(
+                t.nbytes for t in small._decoded.values()) <= budget
+        assert len(small._decoded) < len(sizes)
+
+
+def test_postings_cache_follows_generations(spark, tmp_path, monkeypatch):
+    # a handle whose cache is full serves extend_index and then
+    # optimize_index (which deletes the old postings dirs) in place; each
+    # next query_one matches a fresh handle and the reference, and no
+    # file is opened after it was deleted
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "index")
+    rows = synth_corpus(120, seed=9)
+    second = [(*r[:4], r[4] + " zzgenerationterm") for r in rows[80:]]
+    index = build_index(spark.createDataFrame(rows[:80], SCHEMA), out,
+                        mode="code", n_splits=8, n_groups=2, block_range=64,
+                        out_partitions=4)
+    texts = [t for _, t in synth_queries(6)] + ["zzgenerationterm import"]
+    opened = []
+    real = pq.ParquetFile
+
+    def spy(source, *args, **kwargs):
+        assert os.path.exists(source), f"opened a deleted file: {source}"
+        opened.append(source)
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", spy)
+
+    def check(all_rows):
+        by_key = {tuple(r[:3]): r[4] for r in all_rows}
+        ref = ReferenceIndex([(r.doc_id, by_key[(r.repo, r.path, r.commit)])
+                              for r in index.docs(spark).collect()])
+        fresh = load_index(out)
+        for text in texts:
+            got = query_one(spark, index, text, k=5)
+            assert got == query_one(spark, fresh, text, k=5)
+            assert got == ref.top_k(text, 5)
+        assert index._decoded
+
+    for text in texts:
+        query_one(spark, index, text, k=5)
+    assert index._decoded
+    assert query_one(spark, index, "zzgenerationterm") == []
+
+    extend_index(spark, index, spark.createDataFrame(second, SCHEMA),
+                 out_partitions=4)
+    assert len(index.manifest.postings_dirs) == 2
+    check(rows[:80] + second)
+    new_ids = {d for _, d, _ in query_one(spark, index, "zzgenerationterm")}
+    assert new_ids and min(new_ids) >= 80
+
+    old_dirs = [os.path.join(out, d) for d in index.manifest.postings_dirs]
+    optimize_index(spark, index, out_partitions=2)
+    del opened[:]
+    assert len(index.manifest.postings_dirs) == 1
+    assert not any(os.path.exists(d) for d in old_dirs)
+    check(rows[:80] + second)
+    assert opened and not any(f.startswith(d + os.sep) for f in opened
+                              for d in old_dirs)
+
+
+def test_warm_driver_pass_reads_no_file(spark, indexes, monkeypatch):
+    # after one warm-up, a repeat search_one and a repeat one-task
+    # search_batch open and decode no parquet file (the zero-I/O
+    # counterpart of test_preloaded_query_one_runs_no_spark_job)
+    import pyarrow.parquet as pq
+
+    index, texts = indexes["extended"]
+    handle = load_index(index.path)
+    queries = list(enumerate(texts))
+    svc = StandingQueryService(spark, handle, k=5)
+    assert _pass_partitions(spark, _qt_rows_driver(spark, handle, queries),
+                            None) == 1
+    one = svc.search_one(texts[0])
+    batch = svc.search_batch(queries)
+    assert one and batch
+
+    def no_io(*args, **kwargs):
+        raise AssertionError("the warm driver pass read a parquet file")
+
+    for name in ("read_row_group", "read_row_groups"):
+        monkeypatch.setattr(pq.ParquetFile, name, no_io)
+    monkeypatch.setattr(pq, "ParquetFile", no_io)
+    assert svc.search_one(texts[0]) == one
+    assert svc.search_batch(queries) == batch
