@@ -317,37 +317,31 @@ def phrase_query_batch(spark, index: LoadedIndex, queries_df, k: int = 10,
 
     if slop > 0:
         inter = _slop_occurrences(hits, slop)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("n_occ"), F.asc("doc_id"))
-        return (
-            inter.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("rank").cast("int").alias("rank"),
-                    "doc_id", "n_occ")
+    else:
+        shifted = hits.select(
+            "query_id", "doc_id", "n_pairs",
+            F.transform(F.col("positions"),
+                        lambda p: p - F.col("off")).alias("starts"),
         )
-
-    shifted = hits.select(
-        "query_id", "doc_id", "n_pairs",
-        F.transform(F.col("positions"), lambda p: p - F.col("off")).alias("starts"),
-    )
-    grouped = shifted.groupBy("query_id", "doc_id").agg(
-        F.count("*").alias("n_terms_present"),
-        F.max("n_pairs").alias("n_pairs"),
-        F.collect_list("starts").alias("arrs"),
-    )
-    inter = (
-        grouped.filter(F.col("n_terms_present") == F.col("n_pairs"))
-        .withColumn(
-            "occ",
-            F.aggregate(
-                F.slice(F.col("arrs"), 2, F.greatest(F.size("arrs") - 1, F.lit(0))),
-                F.element_at(F.col("arrs"), 1),
-                lambda acc, x: F.array_intersect(acc, x),
-            ),
+        grouped = shifted.groupBy("query_id", "doc_id").agg(
+            F.count("*").alias("n_terms_present"),
+            F.max("n_pairs").alias("n_pairs"),
+            F.collect_list("starts").alias("arrs"),
         )
-        .withColumn("n_occ", F.size("occ").cast("long"))
-        .filter(F.col("n_occ") > 0)
-    )
+        inter = (
+            grouped.filter(F.col("n_terms_present") == F.col("n_pairs"))
+            .withColumn(
+                "occ",
+                F.aggregate(
+                    F.slice(F.col("arrs"), 2,
+                            F.greatest(F.size("arrs") - 1, F.lit(0))),
+                    F.element_at(F.col("arrs"), 1),
+                    lambda acc, x: F.array_intersect(acc, x),
+                ),
+            )
+            .withColumn("n_occ", F.size("occ").cast("long"))
+            .filter(F.col("n_occ") > 0)
+        )
     w = Window.partitionBy("query_id").orderBy(F.desc("n_occ"), F.asc("doc_id"))
     return (
         inter.withColumn("rank", F.row_number().over(w))

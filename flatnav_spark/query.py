@@ -2,7 +2,8 @@
 (python-bindings/src/flatnav/bindings.cpp:161-228: thread fan-out over
 queries against a shared read-only index). Here the read-only index is the
 postings parquet, the fan-out is Spark task parallelism over posting
-blocks, and the per-query state is a numpy top-k heap per task.
+blocks, and the per-query state is one row of a task's (queries x k)
+top-k arrays.
 
 Plan shape — ONE shuffle on the hot path, no join:
 
@@ -24,15 +25,15 @@ Plan shape — ONE shuffle on the hot path, no join:
      job), sortWithinPartitions(chunk_id, term),
      mapInPandas scorer: each task walks its chunks in order; per chunk it
      decodes every needed row's postings in ONE concatenated varint pass,
-     then scores the chunk's blocks ascending, accumulating contributions
-     for all queries (vectorized per (term, query) pair, ascending term
-     order per doc — the determinism contract shared with
-     flatnav_spark.reference). Because chunk_id = doc_id // (block_range *
-     chunk_blocks) is term-independent, a doc's full score is computed in
-     exactly one task.
-  4. per-task per-query top-k (k rows out per query per task), then a
-     final window row_number() over (score desc, doc_id asc) <= k — the
-     Q4 sort+truncate analog (Index.h:402-406) with explicit tie-breaking.
+     then scores the chunk's blocks ascending, each with ONE bincount of
+     all active queries' contributions (ascending term order per doc —
+     the determinism contract shared with flatnav_spark.reference) and
+     ONE lexsort merging the hits into every query's top-k. Because
+     chunk_id = doc_id // (block_range * chunk_blocks) is
+     term-independent, a doc's full score is computed in exactly one task.
+  4. per-task top-k (k rows out per query per task), then a final window
+     row_number() over (score desc, doc_id asc) <= k — the Q4
+     sort+truncate analog (Index.h:402-406) with explicit tie-breaking.
 
 A pass that sizes itself to ONE task (_pass_partitions: the batch's
 summed query-term df is at most TARGET_POSTINGS_PER_TASK) skips steps 2-4
@@ -64,10 +65,10 @@ accumulators (the ``_distance_computations`` analog, Index.h:83-84).
 Memory discipline (round-2 fix): the per-block accumulator is sized to
 (block_range x ACTIVE queries in that block), not the whole batch, and
 ``batch_query`` chunks query sets above ``max_queries_per_pass`` — per-task
-memory is flat in the total query count. The WAND bookkeeping itself is
-vectorized (one np.add.at over a precomputed CSR of (term -> queries)) and
-skipped entirely while no query has a full top-k yet, so pruning costs
-~nothing when it cannot help (the round-1 N32 regression).
+memory is flat in the total query count. The WAND bookkeeping is
+vectorized too: one bincount per chunk builds the (query, block) bound
+matrix from a precomputed CSR of (term -> queries), and a block's
+active set is one comparison against the thresholds.
 """
 
 from __future__ import annotations
@@ -94,67 +95,33 @@ _UB_ABS = 1e-12
 DEFAULT_MAX_QUERIES_PER_PASS = 4096
 
 
-class _TopK:
-    """Per-query bounded result set with (score desc, doc_id asc) order."""
-
-    __slots__ = ("k", "doc_ids", "scores")
-
-    def __init__(self, k: int):
-        self.k = k
-        self.doc_ids = np.empty(0, dtype=np.int64)
-        self.scores = np.empty(0, dtype=np.float64)
-
-    def push(self, doc_ids: np.ndarray, scores: np.ndarray) -> None:
-        d = np.concatenate([self.doc_ids, doc_ids])
-        s = np.concatenate([self.scores, scores])
-        order = np.lexsort((d, -s))[: self.k]
-        self.doc_ids, self.scores = d[order], s[order]
-
-    def threshold(self) -> float:
-        """Score a candidate must beat (or tie) to enter: the k-th score,
-        or -inf while the set is not full."""
-        if self.scores.size < self.k:
-            return -np.inf
-        return float(self.scores[-1])
-
-
 class _QueryPlan:
     """Precomputed CSR of term -> (query indices, weights), shared by every
     task via the UDF closure. tid order = ascending term order — the
-    accumulation-order determinism contract."""
+    accumulation-order determinism contract. ``qmap`` maps each term to
+    {query index: weight}, so a (term, query) pair occurs once."""
 
-    def __init__(self, qmap: Dict[str, List[Tuple[int, float]]]):
-        self.terms = sorted(qmap.keys())
+    def __init__(self, qmap: Dict[str, Dict[int, float]]):
+        self.terms = sorted(qmap)
         self.tid = {t: i for i, t in enumerate(self.terms)}
-        offs = [0]
-        q_idx: List[int] = []
-        weights: List[float] = []
-        for t in self.terms:
-            for q, w in qmap[t]:
-                q_idx.append(q)
-                weights.append(w)
-            offs.append(len(q_idx))
-        self.offsets = np.asarray(offs, dtype=np.int64)
-        self.q_idx = np.asarray(q_idx, dtype=np.int64)
-        self.weights = np.asarray(weights, dtype=np.float64)
+        self.offsets = np.cumsum([0] + [len(qmap[t]) for t in self.terms])
+        self.q_idx = np.fromiter((q for t in self.terms for q in qmap[t]),
+                                 dtype=np.int64)
+        self.weights = np.fromiter(
+            (w for t in self.terms for w in qmap[t].values()), dtype=np.float64)
 
     def row_tids(self, terms: np.ndarray) -> np.ndarray:
         """Vectorized term -> tid (-1 for unknown)."""
         return pd.Series(terms).map(self.tid).fillna(-1).to_numpy(np.int64)
 
-    def flatten(self, tids: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def flatten(self, tids: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
         """For segment rows with term ids ``tids`` (all >= 0): indices into
         (q_idx, weights) for every (row, query-using-row's-term) pair, plus
         the per-row pair counts. Pure numpy, no python loop."""
         starts = self.offsets[tids]
-        lens = (self.offsets[tids + 1] - starts).astype(np.int64)
-        total = int(lens.sum())
-        if total == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int64), lens
+        lens = self.offsets[tids + 1] - starts
         base = np.repeat(starts - np.concatenate(([0], np.cumsum(lens)[:-1])), lens)
-        flat = base + np.arange(total, dtype=np.int64)
-        rows = np.repeat(np.arange(len(tids), dtype=np.int64), lens)
-        return flat, rows, lens
+        return base + np.arange(int(lens.sum()), dtype=np.int64), lens
 
 
 def _make_partition_scorer(
@@ -183,10 +150,16 @@ def _make_partition_scorer(
     against CURRENT thresholds. Per-block memory stays
     O(block_range x active queries) float64 — active, not total.
 
-    The outer-product accumulate applies, per (query, doc) cell, exactly
-    one scalar IEEE add of w*tfn per term in ascending term order —
-    bit-identical to the reference scorer's sequential accumulation (IEEE
-    multiply commutes).
+    A block is scored whole-batch: its (run, active query) pairs, in
+    ascending term order, expand to one (cell, w*tfn) entry per posting,
+    and ONE np.bincount adds them into the dense (active query x
+    block_range) accumulator. bincount adds one scalar at a time in input
+    order from 0.0, so each (query, doc) cell gets exactly one IEEE add of
+    w*tfn per term in ascending term order — bit-identical to the
+    reference scorer's sequential accumulation (IEEE multiply commutes).
+    The top-k of every query lives in (n_q, k) doc and score arrays
+    merged with the block's hits by ONE lexsort on (query, score desc,
+    doc_id asc); column k-1 of a full row is that query's new threshold.
 
     WAND is counted at three grains (the M4 distance-computations analog):
     whole blocks, sub-runs ("segments" — the old (term, block) decode
@@ -220,13 +193,18 @@ def _make_partition_scorer(
     scorer = get_scorer(scorer_name)
 
     def score_partition(batches):
-        topk = [_TopK(k) for _ in range(n_q)]
-        # per-query k-th score lower bound (global seed, then grown locally)
-        thr = (seed_thr.astype(np.float64, copy=True) if seed_thr is not None
+        # per-query top-k, (score desc, doc_id asc) along each row; -inf
+        # scores pad a top-k that is not full, so column k-1 holds the
+        # k-th score or -inf
+        top_d = np.zeros((n_q, k), dtype=np.int64)
+        top_s = np.full((n_q, k), -np.inf)
+        # per-query pruning threshold: theta times a lower bound on the
+        # query's k-th score (the global seed, then grown by the task's own
+        # k-th; x -> x * theta is monotone, so growing the product is
+        # growing the bound). -inf leaves a query unpruned.
+        thr = (seed_thr * approx_factor if seed_thr is not None
                else np.full(n_q, -np.inf))
-        # comparison threshold: thr * theta (== thr when theta == 1.0;
-        # -inf * theta == -inf so unseeded queries stay unpruned)
-        thr_cmp = thr * approx_factor
+        row_of_q = np.zeros(n_q, dtype=np.int64)  # query -> accumulator row
         n_scored = 0
         n_pruned = 0
         n_seg_scored = 0
@@ -236,10 +214,9 @@ def _make_partition_scorer(
         # finest-grain honest measure: in batch mode a block is rarely
         # skippable for EVERY query at once, but per-query column pruning
         # still saves the decode/accumulate/top-k work
-        any_full = bool(np.isfinite(thr).any())  # any bound -> pruning can fire
 
         def do_chunk(pdf: pd.DataFrame) -> None:
-            nonlocal n_scored, n_pruned, n_seg_scored, n_seg_pruned, any_full
+            nonlocal n_scored, n_pruned, n_seg_scored, n_seg_pruned
             nonlocal n_qb_scored, n_qb_pruned
             tids = plan.row_tids(pdf["term"].to_numpy())
             known = tids >= 0
@@ -248,8 +225,7 @@ def _make_partition_scorer(
             if not known.all():
                 pdf = pdf[known]
                 tids = tids[known]
-            flat, rows, lens = plan.flatten(tids)
-            qi_all = plan.q_idx[flat]
+            flat, lens = plan.flatten(tids)
             n_rows = len(tids)
             row_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
 
@@ -264,19 +240,27 @@ def _make_partition_scorer(
             # distinct blocks present in this chunk, ascending
             blocks_present = np.unique(run_block)
             nb = blocks_present.size
+            base_doc = blocks_present * block_range
             run_bloc = np.searchsorted(blocks_present, run_block)
 
             # per-(query, block-local) presence + WAND upper-bound matrix:
-            # expand each run to its row's (query, weight) pairs
+            # expand each run to its row's (query, weight) pairs, grouped
+            # by block; runs are term-ascending, and the stable sort keeps
+            # that order within each block (the accumulation-order contract)
             ln = lens[run_row]
             total = int(ln.sum())
             off = np.zeros(u, dtype=np.int64)
             np.cumsum(ln[:-1], out=off[1:])
             exp_run = np.repeat(np.arange(u, dtype=np.int64), ln)
             rel = np.arange(total, dtype=np.int64) - np.repeat(off, ln)
-            pair_idx = row_start[run_row][exp_run] + rel
-            q_of = qi_all[pair_idx]
-            cell = q_of * nb + run_bloc[exp_run]
+            by_block = np.argsort(run_bloc[exp_run], kind="stable")
+            pair_run = exp_run[by_block]
+            pair_idx = flat[(row_start[run_row][exp_run] + rel)[by_block]]
+            pair_q = plan.q_idx[pair_idx]
+            pair_w = plan.weights[pair_idx]
+            pair_bloc = run_bloc[pair_run]
+            block_pairs = np.searchsorted(pair_bloc, np.arange(nb + 1))
+            cell = pair_q * nb + pair_bloc
             present2d = np.zeros(n_q * nb, dtype=bool)
             present2d[cell] = True
             present2d = present2d.reshape(n_q, nb)
@@ -284,9 +268,8 @@ def _make_partition_scorer(
                 run_maxtf = np.concatenate(pdf["block_max_tf"].to_numpy()).astype(np.int64)
                 run_mindl = np.concatenate(pdf["block_min_dl"].to_numpy()).astype(np.int64)
                 tfn_up = scorer.tfn_upper(run_maxtf, run_mindl, avgdl, params)
-                w_of = plan.weights[flat[pair_idx]]
                 ub2d = np.bincount(
-                    cell, weights=w_of * tfn_up[exp_run], minlength=n_q * nb
+                    cell, weights=pair_w * tfn_up[pair_run], minlength=n_q * nb
                 ).reshape(n_q, nb)
                 ub2d[present2d] = ub2d[present2d] * (1.0 + _UB_REL) + _UB_ABS
             else:
@@ -294,10 +277,8 @@ def _make_partition_scorer(
 
             # ---- decode decision at chunk entry (thresholds only grow,
             # so entry-active is a superset of every later active set) ----
-            if prune and any_full:
-                entry_active2d = present2d & (ub2d >= thr_cmp[:, None])
-            else:
-                entry_active2d = present2d
+            entry_active2d = (present2d & (ub2d >= thr[:, None]) if prune
+                              else present2d)
             # a run needs decoding iff any query is entry-active on its block
             q_any_b = entry_active2d.any(axis=0)  # (nb,)
             run_needed = q_any_b[run_bloc]
@@ -330,65 +311,67 @@ def _make_partition_scorer(
             run_slice_start = np.full(u, -1, dtype=np.int64)
             run_slice_start[run_dec] = d_run_start
 
+            runs_of_block = np.bincount(run_bloc, minlength=nb)
+
             # ---- walk the chunk's blocks ascending, freshest thresholds ----
-            # per block, runs must apply in ascending TERM order: run_row is
-            # already term-ascending, so a stable selection preserves it
             for b_loc in range(nb):
-                runs_b = np.flatnonzero(run_bloc == b_loc)
-                if prune and any_full:
-                    active = present2d[:, b_loc] & (ub2d[:, b_loc] >= thr_cmp)
-                else:
-                    active = present2d[:, b_loc]
-                n_qb_scored += int(active.sum())
-                n_qb_pruned += int((present2d[:, b_loc] & ~active).sum())
-                if not active.any():
+                present = present2d[:, b_loc]
+                active = present & (ub2d[:, b_loc] >= thr) if prune else present
+                n_act = int(np.count_nonzero(active))
+                n_qb_scored += n_act
+                n_qb_pruned += int(np.count_nonzero(present)) - n_act
+                if n_act == 0:
                     n_pruned += 1
-                    n_seg_pruned += runs_b.size
+                    n_seg_pruned += int(runs_of_block[b_loc])
                     continue
                 n_scored += 1
-                base = int(blocks_present[b_loc]) * block_range
-
                 act = np.flatnonzero(active)
-                n_act = act.size
-                inv = np.full(n_q, -1, dtype=np.int64)
-                inv[act] = np.arange(n_act, dtype=np.int64)
-                acc = np.zeros((block_range, n_act), dtype=np.float64)
-                seen = np.zeros((block_range, n_act), dtype=bool)
+                acc_rows = np.arange(n_act)
 
-                scored_here = 0
-                for uu in runs_b.tolist():
-                    r = run_row[uu]
-                    sl = slice(row_start[r], row_start[r] + lens[r])
-                    qi = qi_all[sl]
-                    mask = active[qi]
-                    if not mask.any():
-                        continue
-                    scored_here += 1
-                    cols = inv[qi[mask]]
-                    w = plan.weights[flat[sl]][mask]
-                    p0 = run_slice_start[uu]
-                    p1 = p0 + run_count[uu]
-                    cell_ix = np.ix_(li_all[p0:p1], cols)
-                    acc[cell_ix] += np.multiply.outer(tfn_all[p0:p1], w)
-                    seen[cell_ix] = True
-                n_seg_scored += scored_here
-                n_seg_pruned += runs_b.size - scored_here
+                # the block's pairs whose query is active, runs in term
+                # order; a run is scored when one of its pairs is kept
+                p = np.arange(block_pairs[b_loc], block_pairs[b_loc + 1])
+                p = p[active[pair_q[p]]]
+                pr = pair_run[p]
+                n_runs = 1 + int(np.count_nonzero(pr[1:] != pr[:-1]))
+                n_seg_scored += n_runs
+                n_seg_pruned += int(runs_of_block[b_loc]) - n_runs
 
-                for local, q_idx in enumerate(act):
-                    hit = np.flatnonzero(seen[:, local])
-                    if hit.size == 0:
-                        continue
-                    t = topk[q_idx]
-                    t.push(hit + base, acc[hit, local])
-                    new_thr = t.threshold()
-                    if new_thr != -np.inf:
-                        any_full = True
-                    # grow-only: never let a task-local k-th (e.g. right
-                    # after this task's top-k first fills) undercut the
-                    # global seed threshold
-                    if new_thr > thr[q_idx]:
-                        thr[q_idx] = new_thr
-                        thr_cmp[q_idx] = new_thr * approx_factor
+                # one (cell, w*tfn) entry per (pair, posting), added into the
+                # (active query x block_range) accumulator by ONE bincount
+                cnt = run_count[pr]
+                ends = np.cumsum(cnt)
+                pair_of = np.repeat(p, cnt)
+                post = np.arange(ends[-1]) + np.repeat(
+                    run_slice_start[pr] - ends + cnt, cnt)
+                row_of_q[act] = acc_rows
+                cells = row_of_q[pair_q[pair_of]] * block_range + li_all[post]
+                acc = np.bincount(cells, weights=tfn_all[post] * pair_w[pair_of],
+                                  minlength=n_act * block_range)
+                seen = np.zeros(n_act * block_range, dtype=bool)
+                seen[cells] = True
+
+                # hits above their query's held k-th (one at or below it
+                # cannot enter: its doc_id is above every held one)
+                held_s = top_s[act]
+                hit = np.flatnonzero(seen)
+                hit = hit[acc[hit] > held_s[hit // block_range, k - 1]]
+                hit_row = hit // block_range
+                # ONE sort by (query, score desc, doc_id asc) over each
+                # active query's k held entries and its hits; the first k
+                # of each query's group are its new top-k
+                q_m = np.concatenate((np.repeat(acc_rows, k), hit_row))
+                d_m = np.concatenate((top_d[act].ravel(),
+                                      base_doc[b_loc] + hit % block_range))
+                s_m = np.concatenate((held_s.ravel(), acc[hit]))
+                order = np.lexsort((d_m, -s_m, q_m))
+                first = acc_rows * k + np.searchsorted(hit_row, acc_rows)
+                top = order[first[:, None] + np.arange(k)]
+                top_d[act] = d_m[top]
+                top_s[act] = s_m[top]
+                # a full top-k's k-th score raises its query's threshold
+                # (grow-only: never undercut the global seed)
+                thr[act] = np.maximum(thr[act], s_m[top[:, -1]] * approx_factor)
 
         carry: Optional[pd.DataFrame] = None
         for batch in batches:
@@ -410,29 +393,9 @@ def _make_partition_scorer(
             if acc is not None:
                 acc.add(n)
 
-        out_q, out_d, out_s = [], [], []
-        for q_idx in range(n_q):
-            t = topk[q_idx]
-            if t.doc_ids.size:
-                out_q.append(np.full(t.doc_ids.size, query_ids[q_idx], dtype=np.int64))
-                out_d.append(t.doc_ids)
-                out_s.append(t.scores)
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "doc_id": np.concatenate(out_d),
-                    "score": np.concatenate(out_s),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.empty(0, dtype=np.int64),
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
+        held = top_s > -np.inf
+        yield pd.DataFrame({"query_id": np.repeat(query_ids, held.sum(axis=1)),
+                            "doc_id": top_d[held], "score": top_s[held]})
 
     return score_partition
 
@@ -639,10 +602,12 @@ def _pass_prologue(index, qt_rows, k, prune, scorer_name, accs,
     scorer = get_scorer(scorer_name)
     qids = sorted({r["query_id"] for r in qt_rows})
     q_index = {q: i for i, q in enumerate(qids)}
-    qmap: Dict[str, List[Tuple[int, float]]] = {}
+    # {term: {query index: weight}}: a query_id repeated with a shared term
+    # (the same text given twice) adds that term's contribution once
+    qmap: Dict[str, Dict[int, float]] = {}
     for r in qt_rows:
         w = scorer.weight(int(r["df"]), m.n_docs)
-        qmap.setdefault(r["term"], []).append((q_index[r["query_id"]], w))
+        qmap.setdefault(r["term"], {})[q_index[r["query_id"]]] = w
     plan = _QueryPlan(qmap)
 
     seed_thr = None
@@ -1058,25 +1023,20 @@ def query_one(spark, index: LoadedIndex, query_text: str, k: int = 10,
     Latency fast path: the query's terms and their stats resolve on the
     driver (tokenizer.py is a pure function; the stats come from the
     preloaded cache, armed automatically below AUTO_PRELOAD_MAX_TERMS),
-    and a pass sized to one task — the usual single query — is scored on
-    the driver by _run_pass_driver: ZERO Spark jobs. A larger pass runs
-    as one Spark job whose per-task top-k candidates (≤ k rows per task)
-    are collected. Either way the merge uses batch_query's (score desc,
-    doc_id asc) order, so results are bit-identical to it (tested). The
-    latency harness in bench.py times repeated calls of this."""
+    and batch_query's own pass loop (_batch_passes) scores them: a pass
+    sized to one task — the usual single query — runs on the driver with
+    ZERO Spark jobs, a larger one is collected from the Spark plan. So
+    results are bit-identical to batch_query by construction (tested).
+    The latency harness in bench.py times repeated calls of this."""
     get_scorer(scorer)
     _check_approx_factor(approx_factor)
     qt_rows = _qt_rows_driver(spark, index, [(0, query_text)])
     if not qt_rows:
         return []
-    seeds = {0: float(seed_thr)} if prune and seed_thr is not None else None
-    p = _pass_partitions(spark, qt_rows, None)
-    if p == 1:
-        cand = _run_pass_driver(index, qt_rows, k, prune, scorer, (None,) * 6,
-                                seed_thr_by_qid=seeds,
-                                approx_factor=approx_factor)
-    else:
-        cand = _run_pass(spark, index, qt_rows, k, prune, p, scorer,
+    seeds = None if seed_thr is None else {0: float(seed_thr)}
+    rows = _batch_passes(spark, index, qt_rows, k, prune, None, scorer,
                          (None,) * 6, seed_thr_by_qid=seeds,
-                         approx_factor=approx_factor).toPandas()
-    return [(rank, d, s) for _, rank, d, s in _ranked(cand, k)]
+                         approx_factor=approx_factor)
+    if not isinstance(rows, list):
+        rows = rows.collect()
+    return sorted((rank, d, s) for _, rank, d, s in rows)

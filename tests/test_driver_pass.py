@@ -9,6 +9,7 @@ a warm call read no file."""
 import os
 import shutil
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -193,6 +194,74 @@ def test_driver_pass_keeps_wand_counters(spark, indexes):
             assert v["pairs_pruned"] > 0
     assert totals[0] == totals[1]
     assert totals[0]["pairs"] > 0
+
+
+# The six WAND counters (blocks, segments, (query, block) pairs; scored,
+# then pruned) of the one-task driver pass at k=5, per mode. Literals: a
+# change to the chunk kernel must count exactly the same work.
+PINNED_COUNTERS = {
+    ("zipf", "bm25"): {"exact": (51, 0, 559, 0, 204, 0),
+                       "wand": (51, 0, 540, 19, 200, 4),
+                       "seeded": (51, 0, 540, 19, 200, 4),
+                       "theta1.5": (10, 41, 65, 494, 13, 191)},
+    ("zipf", "tfidf_ip"): {"exact": (51, 0, 559, 0, 204, 0),
+                           "wand": (19, 32, 178, 381, 57, 147),
+                           "seeded": (6, 45, 55, 504, 20, 184),
+                           "theta1.5": (8, 43, 71, 488, 27, 177)},
+    ("extended", "bm25"): {"exact": (4, 0, 208, 0, 47, 0),
+                           "wand": (4, 0, 178, 30, 38, 9),
+                           "seeded": (4, 0, 178, 30, 38, 9),
+                           "theta1.5": (4, 0, 170, 38, 32, 15)},
+    ("extended", "tfidf_ip"): {"exact": (4, 0, 208, 0, 47, 0),
+                               "wand": (4, 0, 179, 29, 37, 10),
+                               "seeded": (4, 0, 179, 29, 37, 10),
+                               "theta1.5": (4, 0, 156, 52, 29, 18)},
+}
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf_ip"])
+@pytest.mark.parametrize("name", ["zipf", "extended"])
+def test_wand_counters_pinned(spark, indexes, name, scorer):
+    index, texts = indexes[name]
+    qdf = _qdf(spark, texts)
+    _assert_one_task(spark, index, qdf)
+
+    def run(**kw):
+        res = batch_query(spark, index, qdf, k=5, scorer=scorer,
+                          collect_metrics=True, **kw)
+        return _rows(res), tuple(int(a.value) for a in
+                                 res._flatnav_accumulators.values())
+
+    exact_rows, exact = run(prune=False)
+    kth = {q: s for q, r, _, s in exact_rows if r == 5}
+    got = {"exact": exact,
+           "wand": run(prune=True)[1],
+           "seeded": run(prune=True, seed_thr_by_qid=kth)[1],
+           "theta1.5": run(prune=True, approx_factor=1.5)[1]}
+    assert got == PINNED_COUNTERS[(name, scorer)]
+
+
+def test_bincount_adds_in_input_order():
+    """The kernel's bit-identical scores (ARCHITECTURE.md section 4, item 3)
+    rest on np.bincount adding each bin's weights one at a time, in input
+    order, from 0.0. NumPy does not document that order; a NumPy whose
+    bincount summed pairwise or in vector lanes would fail here."""
+    def in_order(idx, w, n):
+        out = [0.0] * n
+        for i, x in zip(idx, w):
+            out[i] += x
+        return out
+
+    assert np.bincount([0, 0, 0], [1e16, -1e16, 1.0]).tolist() == [1.0]
+    assert np.bincount([0, 0, 0], [1e16, 1.0, -1e16]).tolist() == [0.0]
+    w = [1e16] + [1.0] * 16 + [-1e16]          # sequential: each +1 rounds away
+    assert np.bincount([0] * 18, w).tolist() == [0.0]
+    rng = np.random.default_rng(7)
+    for n_bins in (1, 3, 64):
+        idx = rng.integers(0, n_bins, 5000)
+        w = rng.standard_normal(5000) * 10.0 ** rng.integers(-8, 17, 5000)
+        assert (np.bincount(idx, w, minlength=n_bins).tolist()
+                == in_order(idx.tolist(), w.tolist(), n_bins))
 
 
 def test_preloaded_query_one_runs_no_spark_job(spark, indexes):

@@ -157,6 +157,12 @@ def test_repeated_query_id_caches_no_threshold(spark, zidx, pairs, cached):
         cold = query_one(spark, zidx, text, k=5)
         assert len(cold) == 5
         assert svc.search_one(text) == cold
+    # the id's terms count once each: its rows are those of one query
+    # over the union of its texts' terms, with pruning on and off
+    union = " ".join(text for _, text in pairs)
+    for prune in (True, False):
+        rows = StandingQueryService(spark, zidx, k=5, prune=prune).search_batch(pairs)
+        assert rows[1] == query_one(spark, zidx, union, k=5, prune=prune)
 
 
 def test_threshold_cache_fifo_eviction(spark, zidx):
